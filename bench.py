@@ -2,7 +2,7 @@
 
 Usage: python bench.py
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the usable core count).
 
 Each query is fully materialized via the noop sink (no driver collect),
 timed after a small warm-up that pays JVM/codegen startup once.
@@ -19,60 +19,13 @@ _REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 if _REPO_DIR not in sys.path:
     sys.path.insert(0, _REPO_DIR)
 
-from manipula_o_de_dataframes_spark.queries import (  # noqa: E402
-    QUERIES,
-    _doc_clusters,
-    _edges_sym_deg,
-    _event_transition_census,
-    _edges_uv,
-    _hb_round_regs,
-    _minhash_sig8,
-    _nation_week_rev,
-    _obs_customer_frame,
-    _order_spans,
-    _bpe_top_merges,
-    _pair_support,
-    _weekly_nation_census,
-    _pq_codes_spooled,
-)
+from manipula_o_de_dataframes_spark.operators.spool import ARTIFACTS, HITS  # noqa: E402
+from manipula_o_de_dataframes_spark.queries import QUERIES  # noqa: E402
 from manipula_o_de_dataframes_spark.session import get_spark  # noqa: E402
 
 
 def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
-
-
-# Spool ROI ledger (VERDICT r10 #6): which timed queries consume each
-# session spool, so the artifact itself says who a build line item pays
-# for. Derived from the helper call graph in queries.py (transitive:
-# e.g. minhash_sig8 feeds _minhash_sig4's four consumers too); kept in
-# sync by tests/test_round11_opt.py::test_spool_consumers_ledger_matches_code.
-SPOOL_CONSUMERS: dict[str, list[str]] = {
-    "edges_uv": ["triangle_counts", "kcore_peel"],  # + feeds edges_sym_deg, hyperball
-    "edges_sym_deg": [
-        "bfs_distances", "label_propagation", "link_prediction",
-        "pagerank_items", "trust_propagation",
-    ],
-    "hyperball_rounds_1_4": ["hyperball_2hop", "neighborhood_function"],
-    "doc_clusters": ["cluster_safe_split", "dedup_clusters", "dedup_survivors", "kish_ess"],
-    "minhash_sig8": [
-        "banding_recall_audit", "edit_distance_near_dup", "near_dup_jaccard_banded",
-        "minhash_signatures", "near_dup_jaccard", "containment_near_dup",
-        "incremental_dedup",
-    ],
-    "pq_codes": ["pq_serve"],
-    "pair_support": ["apriori_triples", "association_rules"],
-    "bpe_merges_r3": ["bpe_merges", "bpe_apply", "bpe_fertility"],
-    "nation_week_census": [
-        "conformal_coverage", "diff_in_diff", "forecast_pinball",
-        "forecast_tournament", "holt_trend", "kendall_tau",
-        "naive_forecast_mape", "runs_test", "spearman_corr", "theilsen_trend",
-    ],
-    "nation_week_rev": ["changepoint_weeks", "weekly_trend"],
-    "order_spans": ["littles_law_audit", "open_order_concurrency"],
-    "event_transition_census": ["event_transitions", "transition_steady_state"],
-    "obs_customer_frame": ["cmh_test", "ipw_ate", "mantel_haenszel"],
-}
 
 
 def main() -> None:
@@ -82,8 +35,8 @@ def main() -> None:
     # silently clobbers the canonical 32-core BENCH_full.json when the
     # artifact carries no cpu identity (VERDICT r10 #3) — the next
     # round's comparison then starts from the wrong file.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("bench")
+    cpus = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm-up: JVM, codegen, parquet footer caches, and the Python worker
@@ -149,19 +102,8 @@ def main() -> None:
     io_probe_start = io_probe()
     probe_timeline: list[list] = []
 
-    build_spool("edges_uv", lambda: _edges_uv(spark, sf_dir))
-    build_spool("edges_sym_deg", lambda: _edges_sym_deg(spark, sf_dir))
-    build_spool("hyperball_rounds_1_4", lambda: _hb_round_regs(spark, sf_dir, 4))
-    build_spool("doc_clusters", lambda: _doc_clusters(spark, sf_dir))
-    build_spool("minhash_sig8", lambda: _minhash_sig8(spark, sf_dir))
-    build_spool("pq_codes", lambda: _pq_codes_spooled(spark, sf_dir))
-    build_spool("pair_support", lambda: _pair_support(spark, sf_dir))
-    build_spool("bpe_merges_r3", lambda: _bpe_top_merges(spark, sf_dir, 3))
-    build_spool("nation_week_census", lambda: _weekly_nation_census(spark, sf_dir))
-    build_spool("nation_week_rev", lambda: _nation_week_rev(spark, sf_dir))
-    build_spool("order_spans", lambda: _order_spans(spark, sf_dir))
-    build_spool("event_transition_census", lambda: _event_transition_census(spark, sf_dir))
-    build_spool("obs_customer_frame", lambda: _obs_customer_frame(spark, sf_dir))
+    for name, build in ARTIFACTS.items():
+        build_spool(name, lambda: build(spark, sf_dir))
     spool_total = round(sum(spool_builds.values()), 3)
 
     # Each query runs TWICE and the headline records the MIN: the bench
@@ -179,8 +121,12 @@ def main() -> None:
     timings: dict[str, float] = {}
     timings_max: dict[str, float] = {}
     noisy_entries: dict[str, list[float]] = {}
+    # Spool ROI ledger (VERDICT r10 #6): a query consumes an artifact
+    # iff the artifact's hit count moved while the query ran.
+    spool_consumers: dict[str, list[str]] = {sp: [] for sp in ARTIFACTS}
 
     def timed(name: str, thunk) -> None:
+        hits0 = HITS.copy()
         runs = []
         for _ in range(2):
             t0 = time.perf_counter()
@@ -193,6 +139,8 @@ def main() -> None:
             noisy_entries[name] = [round(r, 3) for r in runs]
         timings[name] = round(min(runs), 3)
         timings_max[name] = round(max(runs), 3)
+        for sp in HITS - hits0:
+            spool_consumers[sp].append(name)
 
     names = sorted(QUERIES)
     for i, name in enumerate(names):
@@ -310,10 +258,10 @@ def main() -> None:
         "metric": "per_query_wall_seconds",
         "unit": "sec",
         "cpus": cpus,
-        "spool_consumers": SPOOL_CONSUMERS,
+        "spool_consumers": spool_consumers,
         "spool_consumer_serve_seconds": {
-            sp: round(sum(timings.get(q, 0.0) for q in qs), 3)
-            for sp, qs in SPOOL_CONSUMERS.items()
+            sp: round(sum(timings[q] for q in qs), 3)
+            for sp, qs in spool_consumers.items()
         },
         "queries": timings,
         "queries_max": timings_max,

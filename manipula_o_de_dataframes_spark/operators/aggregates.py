@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.formatting import dsum
-
 
 def _cols(xs) -> list[Column]:
     return [F.col(x) if isinstance(x, str) else x for x in xs]
@@ -87,11 +85,6 @@ def all_equal_collapse(value) -> tuple[Column, Column]:
     return collapsed, F.array_sort(F.collect_list(v))
 
 
-def group_sum(df: DataFrame, keys: list[str], value: str, alias: str) -> DataFrame:
-    """A1: group-by exact sum (groupby(...)['Valor Orçado'].sum(), APC:76)."""
-    return df.groupBy(*keys).agg(dsum(value).alias(alias))
-
-
 def distinct_combinations(df: DataFrame, cols: list[str]) -> DataFrame:
     """A12: distinct key combinations (groupby-first-drop ≡ distinct, APC:226-228)."""
     return df.select(*cols).distinct()
@@ -135,14 +128,3 @@ def ordered_list_str_salted(
     return merged.select(
         *keys, rendered.alias("__rendered"), F.col("__n_total").cast("long").alias("__count")
     )
-
-
-def group_apply(df: DataFrame, keys: list[str], fn, schema) -> DataFrame:
-    """A13/D3 escape hatch: per-group custom program via applyInPandas.
-
-    The reference's group-iterate loops (APC:273-298, MAC:314-389) all
-    decompose into ordered_list + last_by + first_by (preferred: pure
-    built-ins, partial-aggregable). This generic UDAF surface exists for
-    logic that genuinely can't: Arrow-batched, one shuffle on the keys.
-    """
-    return df.groupBy(*keys).applyInPandas(fn, schema=schema)

@@ -9,7 +9,7 @@ predicates, which Catalyst conjuncts and pushes down as one.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ALL = "Todos"  # reference sentinel for "no filter on this column" (MAC:420)
@@ -35,14 +35,3 @@ def dynamic(df: DataFrame, spec: dict[str, object]) -> DataFrame:
 def date_range(df: DataFrame, column: str, lo, hi) -> DataFrame:
     """F3: conjunctive date-range filter (APC:264-267)."""
     return df.filter(F.col(column).between(F.lit(lo), F.lit(hi)))
-
-
-def null_count(column) -> Column:
-    """F6: count of nulls in a column (df[col].isna().sum(), MAC:531)."""
-    c = F.col(column) if isinstance(column, str) else column
-    return F.count(F.when(c.isNull(), 1)).alias(f"{column}_nulls")
-
-
-def distinct_count_where(df: DataFrame, predicate: Column, key: str) -> DataFrame:
-    """F8: distinct keys under a predicate (len(df[mask][k].unique()), MAC:1099)."""
-    return df.filter(predicate).agg(F.countDistinct(key).alias("n"))

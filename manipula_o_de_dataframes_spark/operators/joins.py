@@ -56,12 +56,14 @@ def enrich(
     key: str,
     defaults: dict[str, object],
 ) -> DataFrame:
-    """J4: broadcast enrichment with defaults for unmatched keys.
+    """J4: enrichment with defaults for unmatched keys.
 
     The reference hand-rolls this as a python dict build + per-row probe
     with fallback attrs (build MAC:284-290, probe MAC:323-348, defaults
-    ABC='C'/empty strings MAC:345-348). In Spark it is a broadcast LEFT
-    join + coalesce(col, default) — left-join-plus-fill, not inner.
+    ABC='C'/empty strings MAC:345-348). In Spark it is a LEFT join +
+    coalesce(col, default) — left-join-plus-fill, not inner. No
+    broadcast hint: the dim can grow with the data, so the size-checked
+    planner (and AQE) decides the join strategy.
     """
     joined = facts.join(dim, key, "left")
     return joined.withColumns(

@@ -13,21 +13,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def null_report(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Q1: per-column null counts in one pass (MAC:531)."""
-    cols = columns or df.columns
-    return df.agg(
-        *[F.count(F.when(F.col(c).isNull(), 1)).alias(f"{c}_nulls") for c in cols],
-        F.count(F.lit(1)).alias("total_rows"),
-    )
-
-
-def required_columns_check(df: DataFrame, required: list[str]) -> dict[str, bool]:
-    """Q1: required-column presence (MAC:252-266) — schema op, driver-side."""
-    have = set(df.columns)
-    return {c: c in have for c in required}
-
-
 def join_compatibility(facts: DataFrame, dim: DataFrame, key: str) -> DataFrame:
     """Q3: unmatched-key count and percentage (MAC:726-774).
 

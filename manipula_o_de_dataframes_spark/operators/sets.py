@@ -15,8 +15,3 @@ from pyspark.sql import DataFrame
 def union_by_name(*frames: DataFrame) -> DataFrame:
     """U1: union of N frames by column name, missing columns → null."""
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
-
-
-def key_difference(a: DataFrame, b: DataFrame, key: str) -> DataFrame:
-    """U2: distinct keys in ``a`` not in ``b`` (set difference, MAC:747-750)."""
-    return a.select(key).distinct().join(b.select(key).distinct(), key, "left_anti")

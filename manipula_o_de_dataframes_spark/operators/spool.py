@@ -8,6 +8,10 @@ re-read them, and the directory is removed at interpreter exit. Local
 mode spools to the system temp dir; on a cluster the same call targets
 job-scratch storage (HDFS/S3). Decimals, longs, and strings round-trip
 parquet exactly, so spooled plans stay bit-identical.
+
+``session_artifact`` is the one memo for frames (or small model
+tables) that several queries of a session share: the first caller
+builds, later callers read the same object.
 """
 
 from __future__ import annotations
@@ -17,12 +21,79 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections import Counter
+from functools import wraps
 
 import time
 
 from pyspark.sql import DataFrame
 
 _STALE_AFTER_S = 7 * 24 * 3600
+
+# Session artifacts: name -> fn(spark, sf_dir) that builds (or serves)
+# the artifact; HITS counts memo hits per name, so a harness derives
+# which queries read an artifact instead of keeping a list by hand.
+ARTIFACTS: dict = {}
+HITS: Counter = Counter()
+_CACHE: dict = {}
+
+
+def _snapshot_fingerprint(sf_dir: str) -> tuple:
+    """(table, file, mtime_ns, size) of every ``*.parquet`` table in
+    ``sf_dir`` — os.stat metadata only, no data read and no Spark job.
+    ``st_mtime_ns``, not whole seconds: a same-second, same-size
+    in-place rewrite (deterministic generators write same-size output)
+    must still change the fingerprint."""
+    entries = []
+    try:
+        for table in sorted(os.listdir(sf_dir)):
+            if not table.endswith(".parquet"):
+                continue
+            p = os.path.join(sf_dir, table)
+            files = sorted(os.listdir(p)) if os.path.isdir(p) else [""]
+            for f in files:
+                st = os.stat(os.path.join(p, f) if f else p)
+                entries.append((table, f, st.st_mtime_ns, st.st_size))
+    except OSError:
+        entries.append(("missing", "", 0, 0))
+    return tuple(entries)
+
+
+def session_artifact(name: str, *registry_args):
+    """Memoize a ``(spark, sf_dir, *args)`` builder once per session and
+    input snapshot, and register it as ``ARTIFACTS[name]``.
+
+    Key = (applicationId, abspath(sf_dir), snapshot fingerprint, name,
+    args). applicationId, not ``id(spark)`` (the allocator reuses ids
+    after a stopped session is collected, which would serve a frame
+    bound to a dead JVM); the fingerprint, not the path alone, so a
+    table rewritten in place rebuilds instead of serving a stale spool.
+    On a miss, entries of other applications and superseded
+    fingerprints of the same directory are evicted; live entries for
+    other directories stay. Builders that return Python values (merge
+    tables) must return immutable ones: every consumer shares them.
+    ``ARTIFACTS[name]`` builds at ``registry_args`` (e.g. HyperBall
+    rounds up to 4)."""
+
+    def decorate(build):
+        @wraps(build)
+        def memo(spark, sf_dir: str, *args):
+            app = spark.sparkContext.applicationId
+            d = os.path.abspath(sf_dir)
+            fp = _snapshot_fingerprint(d)
+            key = (app, d, fp, name, args)
+            if key in _CACHE:
+                HITS[name] += 1
+                return _CACHE[key]
+            for k in [k for k in _CACHE if k[0] != app or (k[1] == d and k[2] != fp)]:
+                del _CACHE[k]
+            value = _CACHE[key] = build(spark, sf_dir, *args)
+            return value
+
+        ARTIFACTS[name] = lambda spark, sf_dir: memo(spark, sf_dir, *registry_args)
+        return memo
+
+    return decorate
 
 
 def _sweep_stale(root: str) -> None:

@@ -17,19 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.formatting import MONEY
 from .spool import spool as _spool
-
-
-def rank_desc(value) -> Column:
-    """W1: SQL RANK() ≡ pandas rank(ascending=False, method='min') (APC:103).
-
-    No tie-break parameter on purpose: RANK's whole contract is that
-    value ties share a rank (method='min'); an extra ORDER BY column
-    would silently turn it into ROW_NUMBER.
-    """
-    order = [F.col(value).desc() if isinstance(value, str) else value.desc()]
-    return F.rank().over(Window.orderBy(*order)).cast("long")
 
 
 def abc_bucket(cum_pct) -> Column:

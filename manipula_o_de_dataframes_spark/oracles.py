@@ -235,12 +235,14 @@ WITH fact AS (
   JOIN part p ON l.l_partkey = p.p_partkey
 ), ranked AS (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY subgrupo, produto, cliente
-            ORDER BY dt DESC, l_orderkey DESC, l_linenumber DESC) AS rn
+            ORDER BY dt DESC, l_orderkey DESC, l_linenumber DESC,
+                     l_quantity DESC, l_returnflag DESC) AS rn
   FROM fact
 )
 SELECT subgrupo, produto, cliente,
-  string_agg(dt, ',' ORDER BY dt, l_orderkey, l_linenumber) AS datas,
-  string_agg(CAST(l_quantity AS VARCHAR), ',' ORDER BY dt, l_orderkey, l_linenumber) AS quantidades,
+  string_agg(dt, ',' ORDER BY dt, l_orderkey, l_linenumber, l_quantity, l_returnflag) AS datas,
+  string_agg(CAST(l_quantity AS VARCHAR), ','
+             ORDER BY dt, l_orderkey, l_linenumber, l_quantity, l_returnflag) AS quantidades,
   MAX(dt) AS ultima_data,
   MAX(CASE WHEN rn = 1 THEN l_returnflag END) AS ultimo_consultor,
   CAST(COUNT(*) AS BIGINT) AS n_interacoes,

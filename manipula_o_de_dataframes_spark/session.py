@@ -47,12 +47,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (driver contract).
+    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (driver contract);
+    the default is the cores this process may run on, so a session never
+    oversubscribes the host or claims cores it does not have.
     """
     import tempfile  # noqa: PLC0415
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    parts = str(shuffle_partitions or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    parts = str(shuffle_partitions or cpus)
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

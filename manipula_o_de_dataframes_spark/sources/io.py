@@ -90,16 +90,6 @@ def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     return {n: read_table(spark, sf_dir, n) for n in (names or TPCH_TABLES)}
 
 
-def _cell_str(v) -> str | None:
-    """Render a mixed-type cell for a string column — delegated to
-    ``xlsx_lite.cell_str`` (moved there with the table-inference
-    helpers so the distributed reader's executor closure pickles by
-    value; see ``xlsx_lite.infer_table``)."""
-    from . import xlsx_lite  # noqa: PLC0415
-
-    return xlsx_lite.cell_str(v)
-
-
 def read_excel(
     spark: SparkSession,
     path: str,

@@ -906,6 +906,7 @@ def test_pq_recall_perfect_on_centroid_corpus(spark, tmp_path):
     # Vectors that ARE codebook reconstructions quantize losslessly, so
     # ADC ordering == exact ordering and recall@k is perfect.
     from manipula_o_de_dataframes_spark import queries as Q
+    from manipula_o_de_dataframes_spark.operators import spool as sp
 
     cb = sim.pq_codebook()
 
@@ -920,9 +921,9 @@ def test_pq_recall_perfect_on_centroid_corpus(spark, tmp_path):
     ]
     spark.createDataFrame(rows, "vec_id long, embedding array<float>")\
         .write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    Q._PQ_CODES_SPOOL.clear()
+    sp._CACHE.clear()
     out = Q.QUERIES["pq_recall"](spark, str(tmp_path)).collect()[0]
-    Q._PQ_CODES_SPOOL.clear()
+    sp._CACHE.clear()
     assert out["k"] == 20 and out["n_hits"] == 20 and out["recall_ppm"] == 1000000
 
 
@@ -1154,14 +1155,23 @@ def test_containment_dominates_jaccard_on_random_docs(spark):
 
 
 def test_pq_spool_memo_invalidates_on_snapshot_change(spark, tmp_path):
-    """The codes memo keys on (applicationId, dir, snapshot
-    fingerprint) — rewriting the embeddings parquet in place must
-    re-encode, never serve the dead snapshot's codes (ADVICE r4:
-    id(spark) could be reused after GC and the old key ignored
-    in-place fixture rewrites entirely)."""
-    import manipula_o_de_dataframes_spark.queries as Q
+    """Session artifacts key on (applicationId, dir, snapshot
+    fingerprint): a repeat call serves the same object, an entry of
+    another application is never served, and rewriting ANY table of
+    the directory in place rebuilds — the codes re-encode, and
+    ``kendall_tau`` rebuilds the nation-week census instead of
+    reducing the stale spool (ADVICE r4: id(spark) could be reused
+    after GC and the old key ignored in-place fixture rewrites)."""
+    import shutil
 
-    cb = sim.pq_codebook()
+    import duckdb
+
+    import manipula_o_de_dataframes_spark.queries as Q
+    from manipula_o_de_dataframes_spark.operators import spool as sp
+    from manipula_o_de_dataframes_spark.oracles import ORACLES
+    from manipula_o_de_dataframes_spark.parity import compare, run_oracle
+    from manipula_o_de_dataframes_spark.sources.io import TPCH_TABLES
+    from tests.conftest import SF_SMOKE
 
     def write(seed):
         rows = [
@@ -1178,10 +1188,46 @@ def test_pq_spool_memo_invalidates_on_snapshot_change(spark, tmp_path):
     assert first is again, "same snapshot must reuse the memoized frame"
     rows1 = {tuple(r) for r in first.collect()}
 
+    # a live entry of another application under the same dir/snapshot
+    (key,) = [k for k in sp._CACHE if k[1] == str(tmp_path) and k[3] == "pq_codes"]
+    foreign = ("other-app",) + key[1:]
+    sp._CACHE[foreign] = "foreign frame"
+    assert Q._pq_codes_spooled(spark, str(tmp_path)) is first
+
     write(3)  # st_mtime_ns keying: no same-second blind window
     second = Q._pq_codes_spooled(spark, str(tmp_path))
     assert second is not first, "rewritten snapshot must re-encode"
+    assert foreign not in sp._CACHE, "other applications' entries are evicted"
     assert {tuple(r) for r in second.collect()} != rows1
+
+    snap = tmp_path / "snap"
+    snap.mkdir()
+    for t in TPCH_TABLES:
+        shutil.copyfile(f"{SF_SMOKE}/{t}.parquet", snap / f"{t}.parquet")
+    census = Q._weekly_nation_census(spark, str(snap))
+    Q.QUERIES["kendall_tau"](spark, str(snap)).collect()
+    duckdb.sql(
+        f"COPY (SELECT * FROM '{snap}/orders.parquet' WHERE o_orderkey % 3 <> 0) "
+        f"TO '{tmp_path}/part.parquet' (FORMAT parquet)"
+    )
+    shutil.move(tmp_path / "part.parquet", snap / "orders.parquet")
+    assert Q._weekly_nation_census(spark, str(snap)) is not census
+    got = Q.QUERIES["kendall_tau"](spark, str(snap))
+    assert not compare(got, run_oracle(ORACLES["kendall_tau"], str(snap)))
+
+
+def test_consumer_query_records_artifact_hit(spark):
+    """bench.py derives each artifact's consumers from the hit counter:
+    running a consumer must record a hit on the artifact it reads."""
+    import manipula_o_de_dataframes_spark.queries as Q
+    from manipula_o_de_dataframes_spark.operators.spool import ARTIFACTS, HITS
+    from tests.conftest import SF_SMOKE
+
+    assert {"nation_week_census", "pq_codes", "hyperball_rounds_1_4"} <= set(ARTIFACTS)
+    ARTIFACTS["nation_week_census"](spark, SF_SMOKE)
+    before = HITS.copy()
+    Q.QUERIES["kendall_tau"](spark, SF_SMOKE)
+    assert set(HITS - before) == {"nation_week_census"}
 
 
 def test_growth_accounting_surfaces_total_outage_week(spark, tmp_path):
@@ -1583,3 +1629,59 @@ def test_balanced_shards_snake_balances_linear_sizes(spark, tmp_path):
     assert [r["shard"] for r in out] == list(range(8))
     assert all(r["n_docs"] == 2 and r["total_chars"] == 17 for r in out), out
     assert all(r["skew_ppm"] == 0 for r in out), out
+
+
+def test_history_lists_total_under_duplicate_line_keys(spark, tmp_path):
+    """(l_orderkey, l_linenumber) repeats in the fixtures. The history
+    tie-break ends in the projected values, so ``ultimo_consultor`` and
+    the lists cannot depend on which duplicate row arrives first: two
+    input orders give the same output, and both match the oracle."""
+    import duckdb
+
+    from manipula_o_de_dataframes_spark.oracles import ORACLES
+    from manipula_o_de_dataframes_spark.parity import compare
+    from manipula_o_de_dataframes_spark.plans.history import product_client_history
+
+    # Each (order, line) pair appears twice with different flags; the
+    # last pair of every group is such a duplicate.
+    lines = [
+        (1, 10, 1, "2024-01-05", 5.0, "A"),
+        (2, 10, 1, "2024-01-05", 5.0, "A"),
+        (2, 10, 1, "2024-01-05", 7.0, "R"),
+        (3, 11, 2, "2024-02-01", 2.0, "N"),
+        (3, 11, 2, "2024-02-01", 2.0, "R"),
+        (4, 11, 1, "2024-02-01", 4.0, "A"),
+        (4, 11, 1, "2024-02-01", 4.0, "N"),
+    ]
+    values = ", ".join(
+        f"({i}, {ok}, {pk}, {ln}, TIMESTAMP '{d}', {q}, '{f}')"
+        for i, (ok, pk, ln, d, q, f) in enumerate(lines)
+    )
+    cols = "i, l_orderkey, l_partkey, l_linenumber, l_shipdate, l_quantity, l_returnflag"
+    con = duckdb.connect()
+    dirs = []
+    for name, order in (("fwd", "i"), ("rev", "i DESC")):
+        d = tmp_path / name
+        d.mkdir()
+        con.execute(
+            f"COPY (SELECT * EXCLUDE (i) FROM (VALUES {values}) t({cols}) "
+            f"ORDER BY {order}) TO '{d}/lineitem.parquet' (FORMAT parquet)"
+        )
+        con.execute(
+            "COPY (SELECT * FROM (VALUES (1, 100), (2, 100), (3, 200), (4, 200))"
+            f" t(o_orderkey, o_custkey)) TO '{d}/orders.parquet' (FORMAT parquet)"
+        )
+        con.execute(
+            "COPY (SELECT * FROM (VALUES (10, 'Brand#1'), (11, 'Brand#2'))"
+            f" t(p_partkey, p_brand)) TO '{d}/part.parquet' (FORMAT parquet)"
+        )
+        dirs.append(str(d))
+
+    for t in ("lineitem", "orders", "part"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{dirs[0]}/{t}.parquet'")
+    oracle = con.execute(ORACLES["product_client_history"]).df()
+    assert sorted(oracle["ultimo_consultor"]) == ["N", "R"]
+    outs = [product_client_history(spark, d) for d in dirs]
+    assert sorted(map(tuple, outs[0].collect())) == sorted(map(tuple, outs[1].collect()))
+    for out in outs:
+        assert not compare(out, oracle)

@@ -6,10 +6,6 @@ check, so a hint on a data-proportional table (customer is ~15 B rows at
 every executor at scale. The r11 pass removed every such hint (AQE and
 the 10 MB auto-threshold still broadcast those sides at local SFs where
 they actually fit); this test keeps them out.
-
-Also pins the bench spool-ledger (VERDICT r10 #6) to the real call
-graph in queries.py so the artifact's ``spool_consumers`` map cannot
-silently drift from the code.
 """
 
 from __future__ import annotations
@@ -60,60 +56,6 @@ def test_no_broadcast_hints_on_unbounded_tables():
         "100 TB — VERDICT r10 #1; let the size-checked planner/AQE "
         "decide instead):\n" + "\n".join(hits)
     )
-
-
-def test_spool_consumers_ledger_matches_code():
-    """Every consumer in bench.SPOOL_CONSUMERS must exist in the query
-    registry, and every direct call site of a spool helper in
-    queries.py must be accounted for in the ledger."""
-    import bench
-    from manipula_o_de_dataframes_spark.queries import QUERIES
-
-    for sp, consumers in bench.SPOOL_CONSUMERS.items():
-        for q in consumers:
-            assert q in QUERIES, f"spool {sp}: unknown consumer {q}"
-
-    # direct call sites: helper name -> set of enclosing q_* functions
-    src = open(os.path.join(_PKG, "queries.py")).read().splitlines()
-    defs = []
-    for i, ln in enumerate(src, 1):
-        m = re.match(r"def (\w+)\(", ln)
-        if m:
-            defs.append((i, m.group(1)))
-
-    def enclosing(line: int) -> str:
-        name = ""
-        for l, n in defs:
-            if l <= line:
-                name = n
-            else:
-                break
-        return name
-
-    helper_to_spool = {
-        "_edges_uv": "edges_uv",
-        "_edges_sym_deg": "edges_sym_deg",
-        "_hb_round_regs": "hyperball_rounds_1_4",
-        "_doc_clusters": "doc_clusters",
-        "_pq_codes_spooled": "pq_codes",
-        "_pair_support": "pair_support",
-        "_bpe_top_merges": "bpe_merges_r3",
-        "_weekly_nation_census": "nation_week_census",
-        "_nation_week_rev": "nation_week_rev",
-        "_order_spans": "order_spans",
-        "_event_transition_census": "event_transition_census",
-        "_obs_customer_frame": "obs_customer_frame",
-    }
-    for helper, spool_name in helper_to_spool.items():
-        for i, ln in enumerate(src, 1):
-            if helper + "(" in ln and not ln.strip().startswith("def "):
-                caller = enclosing(i)
-                if caller.startswith("q_"):
-                    q = caller[2:]
-                    assert q in bench.SPOOL_CONSUMERS[spool_name], (
-                        f"{q} consumes {helper} (queries.py:{i}) but is "
-                        f"missing from SPOOL_CONSUMERS[{spool_name!r}]"
-                    )
 
 
 def test_global_ranks_scaled_rejects_bad_specs():
