@@ -21,7 +21,7 @@ if _REPO_DIR not in sys.path:
 
 from manipula_o_de_dataframes_spark.operators.spool import ARTIFACTS, HITS  # noqa: E402
 from manipula_o_de_dataframes_spark.queries import QUERIES  # noqa: E402
-from manipula_o_de_dataframes_spark.session import get_spark  # noqa: E402
+from manipula_o_de_dataframes_spark.session import cds_state, get_spark  # noqa: E402
 
 
 def materialize(df) -> None:
@@ -37,6 +37,9 @@ def main() -> None:
     # round's comparison then starts from the wrong file.
     spark = get_spark("bench")
     cpus = spark.sparkContext.defaultParallelism
+    # Whether the driver JVM mapped its class-data-sharing archive: a
+    # capture without it pays a slower cold start.
+    cds = cds_state()
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm-up: JVM, codegen, parquet footer caches, and the Python worker
@@ -258,6 +261,7 @@ def main() -> None:
         "metric": "per_query_wall_seconds",
         "unit": "sec",
         "cpus": cpus,
+        "cds": cds,
         "spool_consumers": spool_consumers,
         "spool_consumer_serve_seconds": {
             sp: round(sum(timings[q] for q in qs), 3)
@@ -314,6 +318,7 @@ def main() -> None:
                 "unit": "sec",
                 "sf": sf,
                 "cpus": cpus,
+                "cds": cds,
                 "n_queries": sum(1 for k in timings if k not in baseline_fixtures),
                 "runs_per_query": 2,
                 "agg": "min",

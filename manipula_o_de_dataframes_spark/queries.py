@@ -5826,18 +5826,18 @@ def q_adaptive_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # text IS NOT NULL: a NULL score would sort NULLS FIRST in Spark's
     # asc window but NULLS LAST in DuckDB's — exclude instead of diverge.
     d = _docs_parallel(spark, sf_dir).filter(F.col("text").isNotNull())
-    s = d.select(
+    scored = d.select(
         "doc_id", "source", F.round(quality_score("text"), 9).alias("quality")
     )
     w = Window.partitionBy("source").orderBy("quality", "doc_id")
-    ranked = s.withColumn("__rn", F.row_number().over(w)).withColumn(
+    ranked = scored.withColumn("__rn", F.row_number().over(w)).withColumn(
         "__n", F.count(F.lit(1)).over(Window.partitionBy("source"))
     )
     med = ranked.filter(
         F.col("__rn") == F.floor((F.col("__n") + 1) / 2)
     ).select("source", F.col("quality").alias("src_median"))
     return (
-        s.join(F.broadcast(med), "source")
+        scored.join(F.broadcast(med), "source")
         .select(
             "doc_id",
             "source",
@@ -10787,22 +10787,16 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hb_sym_edges(spark: SparkSession, sf_dir: str):
-    """Symmetric co-purchase edge list + self-loops — the HyperBall
-    input frame shared by ``hyperball_2hop`` and
-    ``neighborhood_function``."""
+@session_artifact("hyperball_ws")
+def _hb_ws(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The spooled HyperBall input (src, dst): symmetric co-purchase
+    edges plus one self-loop per node."""
     edges = _edges_uv(spark, sf_dir)
     sym = edges.select(
         F.col("u").alias("src"), F.col("v").alias("dst")
     ).unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
     nodes = sym.select("src").distinct()
-    return sym, sym.unionAll(nodes.select("src", F.col("src").alias("dst")))
-
-
-@session_artifact("hyperball_ws")
-def _hb_ws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The spooled HyperBall input: symmetric edges plus self-loops."""
-    return spool(_hb_sym_edges(spark, sf_dir)[1])
+    return spool(sym.unionAll(nodes.select("src", F.col("src").alias("dst"))))
 
 
 @session_artifact("hyperball_rounds_1_4", 4)
@@ -10910,10 +10904,13 @@ def q_hyperball_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     have blessed the bug, so sketch queries here carry BOTH), and
     register packing is a 16× shuffle cut with identical hashes.
     Accuracy vs brute 2-hop is pinned in the test (m=16 ⇒ ~26% σ).
+    The degree is read from the spooled ``_symdeg_nodes``: the distinct
+    u<v edges count each neighbour once, as the symmetric edge list does.
     """
-    sym, _ = _hb_sym_edges(spark, sf_dir)
     b2 = _hb_round(spark, sf_dir, 2)
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
+    deg = _symdeg_nodes(spark, sf_dir).select(
+        F.col("u").alias("src"), F.col("__deg").alias("degree")
+    )
     return b2.select("src", _hb_num().alias("__num")).join(deg, "src").select(
         F.col("src").alias("node"),
         F.col("degree").cast("long").alias("degree"),
@@ -13413,9 +13410,10 @@ def q_join_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All counts are exact integers from counting joins (the
     intermediate is COUNTED, never materialized wide — a count-only
-    aggregate over the join keys). One scan per arm over broadcast
-    dims; finals are asserted equal across plans in tests (join order
-    can't change the answer, only the work).
+    aggregate over the join keys). One scan per arm; only nation is
+    broadcast by hint, since customer⋈nation grows with the data.
+    Finals are asserted equal across plans in tests (join order can't
+    change the answer, only the work).
     """
     o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
@@ -13426,16 +13424,13 @@ def q_join_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oc = o.join(c, o["o_custkey"] == c["c_custkey"])
     ofc = of.join(c, of["o_custkey"] == c["c_custkey"])
     cn = c.join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-    ofcn = of.join(
-        F.broadcast(cn), of["o_custkey"] == cn["c_custkey"]
-    )
+    ofcn = of.join(cn, of["o_custkey"] == cn["c_custkey"])
     arms = [
         ("fact_first_late_filter", oc, oc.filter(F.col("o_orderstatus") == "F")
          .join(F.broadcast(n), F.col("c_nationkey") == n["n_nationkey"])),
         ("fact_first_pushed", ofc, ofc.join(
             F.broadcast(n), F.col("c_nationkey") == n["n_nationkey"])),
-        ("dim_first_late_filter", cn, o.join(
-            F.broadcast(cn), o["o_custkey"] == cn["c_custkey"])
+        ("dim_first_late_filter", cn, o.join(cn, o["o_custkey"] == cn["c_custkey"])
          .filter(F.col("o_orderstatus") == "F")),
         ("dim_first_pushed", cn, ofcn),
     ]

@@ -8,11 +8,20 @@ UTC session timezone so timestamp rendering matches a UTC-naive oracle
 
 At cluster scale the same builder applies minus ``master``; AQE +
 broadcast thresholds are the knobs that matter at 100 TB.
+
+Cold start: ``get_spark`` maps a per-machine class-data-sharing archive
+of Spark's classes into the driver JVM (see the section at the end).
 """
 
 from __future__ import annotations
 
+import atexit
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
@@ -53,9 +62,11 @@ def get_spark(
     """
     import tempfile  # noqa: PLC0415
 
+    from pyspark import SparkContext  # noqa: PLC0415
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     parts = str(shuffle_partitions or cpus)
-    return (
+    builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         # Local mode defaults to a 1 GiB JVM heap shared by every worker
@@ -92,5 +103,250 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
     )
+    if SparkContext._gateway is not None:  # the JVM is already up
+        return builder.getOrCreate()
+    return _launch(builder)
+
+
+# --- class-data sharing (AppCDS) for the driver JVM ---------------------
+#
+# Most of a cold launch is the JVM loading and verifying about 14.6 k
+# Spark classes. A dynamic archive (OpenJDK 13+) holds every class the
+# training JVM loaded from the class path, already parsed and verified,
+# and a later JVM maps it instead. One archive per machine lives in
+# ``cds_cache_dir()``, keyed by the JDK and the Spark jars. Three hazards
+# shape the code below:
+# - the JVM dies with SIGBUS on a truncated archive (``-Xshare:auto``
+#   does not fall back), so an archive is written to a ``.part`` file,
+#   published by rename only after the JVM exited 0, and refused unless
+#   its size matches the size stored beside it; an archive of the right
+#   size with corrupt content fails ``-XX:+VerifySharedSpaces`` (a CRC of
+#   every region, about 0.2 s a launch) and is not mapped;
+# - the JVM refuses to dump when a non-empty directory is on the class
+#   path, and ``spark-class`` puts the conf dir there, so both training
+#   and mapping launches point ``SPARK_CONF_DIR`` at an empty directory;
+# - ``-Xshare:auto`` skips a stale archive silently, so the launch reads
+#   the JVM's memory map and deletes an archive that was not mapped.
+
+_CDS_STATE = "off:unlaunched"
+_TRAIN_WAIT_S = 60  # bounded wait at exit for the JVM to write its archive
+
+
+class CdsPlan(NamedTuple):
+    state: str  # "mapped" if the archive maps, "training", or "off:<reason>"
+    java_opts: str | None = None
+    conf_dir: str | None = None
+    archive: str | None = None
+    part: str | None = None
+    lock: str | None = None
+
+
+def cds_state() -> str:
+    """What the running driver JVM got: ``mapped``, ``training`` (it
+    writes the archive at exit) or ``off:<reason>``, the reason one of
+    ``conf``, ``jdk``, ``busy``, ``unmapped``, ``gateway``, ``unlaunched``
+    (README, "Cold start")."""
+    return _CDS_STATE
+
+
+def cds_cache_dir() -> str:
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(base, "spark-graft")
+
+
+def _java_home() -> str | None:
+    """The JDK ``spark-class`` runs: ``$JAVA_HOME``, else ``java`` on PATH."""
+    if os.environ.get("JAVA_HOME"):
+        return os.environ["JAVA_HOME"]
+    java = shutil.which("java")
+    return os.path.dirname(os.path.dirname(os.path.realpath(java))) if java else None
+
+
+def cds_key(java_home: str, spark_home: str) -> str:
+    """Digest of ``os.stat`` of what an archive depends on: the JDK's
+    class image, VM and base archive, and every Spark jar. Raises
+    ``OSError`` when the JDK has no base archive (no dynamic CDS)."""
+    paths = [
+        os.path.join(java_home, "lib", "modules"),
+        os.path.join(java_home, "lib", "server", "libjvm.so"),
+        os.path.join(java_home, "lib", "server", "classes.jsa"),
+    ] + sorted(glob.glob(os.path.join(spark_home, "jars", "*")))
+    h = hashlib.sha1()
+    for p in paths:
+        st = os.stat(p)
+        h.update(f"{p}\0{st.st_size}\0{st.st_mtime_ns}\0{st.st_ino}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, owned by another user
+        pass
+    return True
+
+
+def _take_lock(lock: str) -> bool:
+    """One trainer per key: create ``lock`` holding this pid, clearing a
+    lock whose pid is dead. False when a live process holds it."""
+    for _ in range(2):
+        try:
+            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+        except FileExistsError:
+            try:
+                with open(lock) as fh:
+                    holder = int(fh.read().strip() or 0)
+            except (OSError, ValueError):
+                holder = 0
+            if holder and _pid_alive(holder):
+                return False
+            _unlink(lock)
+            continue
+        with os.fdopen(fd, "w") as fh:
+            fh.write(str(os.getpid()))
+        return True
+    return False
+
+
+def _unlink(*paths: str) -> None:
+    for p in paths:
+        try:
+            os.unlink(p)
+        except FileNotFoundError:
+            pass
+
+
+def _conf_is_default(spark_home: str) -> bool:
+    """True when the launch's class path holds no user directory: no conf
+    dir set by the user, ``$SPARK_HOME/conf`` only templates, and no
+    driver Java options in the submit args that would replace ours."""
+    if any(os.environ.get(v) for v in ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR")):
+        return False
+    submit = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+    if "extraJavaOptions" in submit or "driver-java-options" in submit:
+        return False
+    try:
+        names = os.listdir(os.path.join(spark_home, "conf"))
+    except FileNotFoundError:
+        names = []
+    return all(n.endswith(".template") for n in names)
+
+
+def cds_plan(cache_dir: str, java_home: str | None, spark_home: str) -> CdsPlan:
+    """Decide how the next driver JVM launches: map the archive, train it
+    (taking the key's lock), or launch plain with the reason."""
+    if not _conf_is_default(spark_home):
+        return CdsPlan("off:conf")
+    try:
+        key = cds_key(java_home or "", spark_home)
+    except OSError:
+        return CdsPlan("off:jdk")
+    conf_dir = os.path.join(cache_dir, "conf")
+    os.makedirs(conf_dir, exist_ok=True)
+    if os.listdir(conf_dir):
+        return CdsPlan("off:conf")
+    archive = os.path.join(cache_dir, f"cds-{key}.jsa")
+    try:
+        with open(archive + ".size") as fh:
+            want = int(fh.read().strip())
+        if os.path.getsize(archive) == want:
+            opts = f"-XX:SharedArchiveFile={archive} -XX:+VerifySharedSpaces"
+            return CdsPlan("mapped", opts, conf_dir, archive)
+    except (OSError, ValueError):
+        pass
+    lock = os.path.join(cache_dir, f"cds-{key}.lock")
+    if not _take_lock(lock):
+        return CdsPlan("off:busy")
+    # Holding the lock: no other process writes this key's files.
+    _unlink(archive, archive + ".size", *glob.glob(os.path.join(cache_dir, f"cds-{key}.*.part")))
+    part = os.path.join(cache_dir, f"cds-{key}.{os.getpid()}.part")
+    # The dump warns once per class it skips (signed jars, old class
+    # files), thousands of lines; errors still print.
+    opts = f"-XX:ArchiveClassesAtExit={part} -Xlog:cds=error"
+    return CdsPlan("training", opts, conf_dir, archive, part, lock)
+
+
+def cds_publish(plan: CdsPlan, returncode: int | None) -> bool:
+    """After the training JVM exited: publish its archive if it exited 0,
+    else delete the part file. Deletes the archives of other keys on
+    publishing, and always releases the lock."""
+    try:
+        if returncode != 0 or not os.path.exists(plan.part):
+            _unlink(plan.part)
+            return False
+        with open(plan.archive + ".size.tmp", "w") as fh:
+            fh.write(str(os.path.getsize(plan.part)))
+        os.replace(plan.archive + ".size.tmp", plan.archive + ".size")
+        os.replace(plan.part, plan.archive)
+        cache_dir = os.path.dirname(plan.archive)
+        for other in glob.glob(os.path.join(cache_dir, "cds-*.jsa*")):
+            if not other.startswith(plan.archive):
+                _unlink(other)
+        return True
+    finally:
+        _unlink(plan.lock)
+
+
+def cds_is_mapped(pid: int, archive: str) -> bool:
+    """The archive appears in ``/proc/<pid>/maps`` only if the JVM mapped it."""
+    try:
+        with open(f"/proc/{pid}/maps") as fh:
+            return archive in fh.read()
+    except OSError:
+        return False
+
+
+def _finish_training(proc: subprocess.Popen, plan: CdsPlan) -> None:
+    """At interpreter exit: let the training JVM exit (it does so when
+    its stdin closes), wait a bounded time for its archive, publish.
+    A SparkContext still live in that JVM is stopped first: otherwise the
+    JVM's exit cuts the accumulator server's connection and it prints an
+    EOFError."""
+    from pyspark import SparkContext  # noqa: PLC0415
+
+    if proc.poll() is None:
+        try:
+            sc = SparkContext._active_spark_context
+            if sc is not None and getattr(SparkContext._gateway, "proc", None) is proc:
+                sc.stop()
+            proc.stdin.close()
+            proc.wait(timeout=_TRAIN_WAIT_S)
+        except Exception:  # noqa: BLE001 - a JVM that does not end in time
+            proc.kill()
+            proc.wait()
+    cds_publish(plan, proc.returncode)
+
+
+def _launch(builder: SparkSession.Builder) -> SparkSession:
+    """Launch the driver JVM with the class-data-sharing plan."""
+    global _CDS_STATE
+    from pyspark import SparkContext  # noqa: PLC0415
+    from pyspark.find_spark_home import _find_spark_home  # noqa: PLC0415
+
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        _CDS_STATE = "off:gateway"
+        return builder.getOrCreate()
+    plan = cds_plan(cds_cache_dir(), _java_home(), _find_spark_home())
+    if plan.java_opts:
+        builder = builder.config("spark.driver.extraJavaOptions", plan.java_opts)
+        os.environ["SPARK_CONF_DIR"] = plan.conf_dir
+    try:
+        spark = builder.getOrCreate()
+    except BaseException:
+        if plan.part:
+            cds_publish(plan, None)
+        raise
+    finally:
+        if plan.java_opts:
+            del os.environ["SPARK_CONF_DIR"]
+    proc = SparkContext._gateway.proc
+    if plan.part:
+        atexit.register(_finish_training, proc, plan)
+    elif plan.archive and not cds_is_mapped(proc.pid, plan.archive):
+        _unlink(plan.archive, plan.archive + ".size")
+        plan = plan._replace(state="off:unmapped")
+    _CDS_STATE = plan.state
+    return spark
