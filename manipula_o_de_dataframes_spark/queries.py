@@ -988,7 +988,7 @@ def q_gapfill_weeks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.expr("sequence(lo, hi, interval 7 days)")).alias("__d")
     ).select(F.col("__d").cast("date").alias("__wk"))
     statuses = o.select(F.col("o_orderstatus").alias("status")).distinct()
-    full = spine.crossJoin(F.broadcast(statuses))
+    full = spine.crossJoin(F.broadcast(statuses))  # bounded: 3 order statuses
     return full.join(wk, ["status", "__wk"], "left").select(
         "status",
         F.date_format("__wk", "yyyy-MM-dd").alias("semana"),
@@ -5826,18 +5826,18 @@ def q_adaptive_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # text IS NOT NULL: a NULL score would sort NULLS FIRST in Spark's
     # asc window but NULLS LAST in DuckDB's — exclude instead of diverge.
     d = _docs_parallel(spark, sf_dir).filter(F.col("text").isNotNull())
-    scored = d.select(
+    s = d.select(
         "doc_id", "source", F.round(quality_score("text"), 9).alias("quality")
     )
     w = Window.partitionBy("source").orderBy("quality", "doc_id")
-    ranked = scored.withColumn("__rn", F.row_number().over(w)).withColumn(
+    ranked = s.withColumn("__rn", F.row_number().over(w)).withColumn(
         "__n", F.count(F.lit(1)).over(Window.partitionBy("source"))
     )
     med = ranked.filter(
         F.col("__rn") == F.floor((F.col("__n") + 1) / 2)
     ).select("source", F.col("quality").alias("src_median"))
     return (
-        scored.join(F.broadcast(med), "source")
+        s.join(F.broadcast(med), "source")  # bounded: 20 doc sources
         .select(
             "doc_id",
             "source",
@@ -10904,12 +10904,12 @@ def q_hyperball_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     have blessed the bug, so sketch queries here carry BOTH), and
     register packing is a 16× shuffle cut with identical hashes.
     Accuracy vs brute 2-hop is pinned in the test (m=16 ⇒ ~26% σ).
-    The degree is read from the spooled ``_symdeg_nodes``: the distinct
-    u<v edges count each neighbour once, as the symmetric edge list does.
+    The degree is counted over the spooled HyperBall input, less the
+    node's self-loop.
     """
     b2 = _hb_round(spark, sf_dir, 2)
-    deg = _symdeg_nodes(spark, sf_dir).select(
-        F.col("u").alias("src"), F.col("__deg").alias("degree")
+    deg = _hb_ws(spark, sf_dir).groupBy("src").agg(
+        (F.count(F.lit(1)) - 1).alias("degree")
     )
     return b2.select("src", _hb_num().alias("__num")).join(deg, "src").select(
         F.col("src").alias("node"),
@@ -11145,16 +11145,16 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     each ONE floor division of exact basket counts (N = total
     baskets; products bounded well under 2⁶³). One fact shuffle for
     the pair census (the expression-side basket fan-out), item counts
-    ride a second census, both attach by broadcast (item/pair tables
-    are support-pruned, the Apriori boundedness argument); the total
-    is a broadcast one-rower. Top-20 by (lift desc, antecedent,
-    consequent) under a total order.
+    ride a second census; both attach without a hint (the item census
+    has one row per ordered part, which grows with the data, so the
+    size-checked planner picks the join); the total is a broadcast
+    one-rower. Top-20 by (lift desc, antecedent, consequent) under a
+    total order.
     """
-    # item and pair censuses are SPOOLED (both support-bounded): the
-    # two directed-rule branches and the two item-side attaches
-    # otherwise each re-ran their fact scan — lineitem is now read
-    # three times (basket count, item census, pair fan-out) instead
-    # of five-plus.
+    # item and pair censuses are SPOOLED: the two directed-rule
+    # branches and the two item-side attaches otherwise each re-ran
+    # their fact scan — lineitem is now read three times (basket
+    # count, item census, pair fan-out) instead of five-plus.
 
     li = read_table_parallel(spark, sf_dir, "lineitem", by=("l_orderkey",)).select(
         "l_orderkey", "l_partkey"
@@ -11181,8 +11181,8 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ia = items.select(F.col("l_partkey").alias("antecedent"), F.col("__ni").alias("__na"))
     ic = items.select(F.col("l_partkey").alias("consequent"), F.col("__ni").alias("__nc"))
     return (
-        directed.join(F.broadcast(ia), "antecedent")
-        .join(F.broadcast(ic), "consequent")
+        directed.join(ia, "antecedent")
+        .join(ic, "consequent")
         .crossJoin(F.broadcast(n_baskets))
         .select(
             "antecedent",
@@ -11578,7 +11578,8 @@ def q_credibility_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     return (
         per_nation.join(
-            F.broadcast(per_region), F.col("n_regionkey") == F.col("__rk")
+            F.broadcast(per_region),  # bounded: 5 regions
+            F.col("n_regionkey") == F.col("__rk"),
         )
         .select(
             F.col("n_name").alias("nation"),
@@ -11817,7 +11818,7 @@ def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(2 * __xb * 1000000 + n_docs) div (2 * n_docs)").alias("__rb"),
     )
     wbv = (
-        scored.join(F.broadcast(means), scored["decile"] == means["__dm"])
+        scored.join(F.broadcast(means), scored["decile"] == means["__dm"])  # bounded: 10 deciles
         .groupBy(scored["decile"].alias("__dw"))
         .agg(
             F.sum(
@@ -11831,7 +11832,7 @@ def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = bins.join(
-        F.broadcast(wbv), bins["decile"] == wbv["__dw"]
+        F.broadcast(wbv), bins["decile"] == wbv["__dw"]  # bounded: 10 deciles
     ).crossJoin(F.broadcast(glob)).select(
         "decile",
         F.col("n_docs").cast("long").alias("n_docs"),
@@ -13616,7 +13617,7 @@ def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = base.agg(F.count(F.lit(1)).alias("__tt"))
     grp = base.groupBy("nation").agg(F.count(F.lit(1)).alias("__n"))
     # complete (nation × segment) lattice so absent cells contribute |0·N − Cᵢ·n|
-    lattice = grp.crossJoin(F.broadcast(glob)).crossJoin(F.broadcast(tot))
+    lattice = grp.crossJoin(F.broadcast(glob)).crossJoin(F.broadcast(tot))  # bounded: 5 segments
     full = lattice.join(cell, ["nation", "__seg"], "left").select(
         "nation",
         "__n",
@@ -14755,7 +14756,7 @@ def q_acf_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("__x").alias("__s"),
     )
     dev = (
-        ts.join(F.broadcast(mom), "__nat")
+        ts.join(F.broadcast(mom), "__nat")  # bounded: 25 nations
         .select(
             "__nat",
             "__t",

@@ -18,6 +18,7 @@ from __future__ import annotations
 import atexit
 import glob
 import hashlib
+import json
 import os
 import shutil
 import subprocess
@@ -120,7 +121,8 @@ def get_spark(
 # - the JVM dies with SIGBUS on a truncated archive (``-Xshare:auto``
 #   does not fall back), so an archive is written to a ``.part`` file,
 #   published by rename only after the JVM exited 0, and refused unless
-#   its size matches the size stored beside it; an archive of the right
+#   its size matches the size stored beside it (``.meta``, which also
+#   names the JDK and Spark it was trained for); an archive of the right
 #   size with corrupt content fails ``-XX:+VerifySharedSpaces`` (a CRC of
 #   every region, about 0.2 s a launch) and is not mapped;
 # - the JVM refuses to dump when a non-empty directory is on the class
@@ -140,12 +142,14 @@ class CdsPlan(NamedTuple):
     archive: str | None = None
     part: str | None = None
     lock: str | None = None
+    homes: tuple[str, str] | None = None  # (java_home, spark_home) trained for
 
 
 def cds_state() -> str:
     """What the running driver JVM got: ``mapped``, ``training`` (it
     writes the archive at exit) or ``off:<reason>``, the reason one of
-    ``conf``, ``jdk``, ``busy``, ``unmapped``, ``gateway``, ``unlaunched``
+    ``conf``, ``jdk``, ``cache``, ``busy``, ``unmapped``, ``gateway``,
+    ``unlaunched``
     (README, "Cold start")."""
     return _CDS_STATE
 
@@ -215,7 +219,7 @@ def _unlink(*paths: str) -> None:
     for p in paths:
         try:
             os.unlink(p)
-        except FileNotFoundError:
+        except OSError:  # gone already, or a cache dir we may not write
             pass
 
 
@@ -235,6 +239,11 @@ def _conf_is_default(spark_home: str) -> bool:
     return all(n.endswith(".template") for n in names)
 
 
+def _read_meta(archive: str) -> dict:
+    with open(archive + ".meta") as fh:
+        return json.load(fh)
+
+
 def cds_plan(cache_dir: str, java_home: str | None, spark_home: str) -> CdsPlan:
     """Decide how the next driver JVM launches: map the archive, train it
     (taking the key's lock), or launch plain with the reason."""
@@ -245,47 +254,70 @@ def cds_plan(cache_dir: str, java_home: str | None, spark_home: str) -> CdsPlan:
     except OSError:
         return CdsPlan("off:jdk")
     conf_dir = os.path.join(cache_dir, "conf")
-    os.makedirs(conf_dir, exist_ok=True)
-    if os.listdir(conf_dir):
-        return CdsPlan("off:conf")
     archive = os.path.join(cache_dir, f"cds-{key}.jsa")
     try:
-        with open(archive + ".size") as fh:
-            want = int(fh.read().strip())
-        if os.path.getsize(archive) == want:
+        if os.path.getsize(archive) == _read_meta(archive)["size"]:
             opts = f"-XX:SharedArchiveFile={archive} -XX:+VerifySharedSpaces"
-            return CdsPlan("mapped", opts, conf_dir, archive)
-    except (OSError, ValueError):
-        pass
+            plan = CdsPlan("mapped", opts, conf_dir, archive)
+        else:
+            plan = None
+    except (OSError, ValueError, KeyError, TypeError):
+        plan = None
     lock = os.path.join(cache_dir, f"cds-{key}.lock")
-    if not _take_lock(lock):
-        return CdsPlan("off:busy")
+    try:
+        os.makedirs(conf_dir, exist_ok=True)
+        if os.listdir(conf_dir):
+            return CdsPlan("off:conf")
+        if plan:
+            return plan
+        if not _take_lock(lock):
+            return CdsPlan("off:busy")
+    except OSError:  # the cache dir cannot be made or written
+        return CdsPlan("off:cache")
     # Holding the lock: no other process writes this key's files.
-    _unlink(archive, archive + ".size", *glob.glob(os.path.join(cache_dir, f"cds-{key}.*.part")))
+    _unlink(archive, archive + ".meta", *glob.glob(os.path.join(cache_dir, f"cds-{key}.*.part")))
     part = os.path.join(cache_dir, f"cds-{key}.{os.getpid()}.part")
     # The dump warns once per class it skips (signed jars, old class
     # files), thousands of lines; errors still print.
     opts = f"-XX:ArchiveClassesAtExit={part} -Xlog:cds=error"
-    return CdsPlan("training", opts, conf_dir, archive, part, lock)
+    return CdsPlan("training", opts, conf_dir, archive, part, lock, (java_home, spark_home))
+
+
+def _orphaned(archive: str) -> bool:
+    """True when the JDK and Spark an archive was trained for no longer
+    stat to its key (upgraded or removed), or it names none."""
+    key = os.path.basename(archive)[len("cds-"):-len(".jsa")]
+    try:
+        meta = _read_meta(archive)
+        return cds_key(meta["java_home"], meta["spark_home"]) != key
+    except (OSError, ValueError, KeyError, TypeError):
+        return True
 
 
 def cds_publish(plan: CdsPlan, returncode: int | None) -> bool:
     """After the training JVM exited: publish its archive if it exited 0,
-    else delete the part file. Deletes the archives of other keys on
-    publishing, and always releases the lock."""
+    else delete the part file. On publishing, deletes the archives of
+    other keys whose JDK or Spark is gone; another install sharing the
+    cache keeps its own. Always releases the lock."""
     try:
         if returncode != 0 or not os.path.exists(plan.part):
             _unlink(plan.part)
             return False
-        with open(plan.archive + ".size.tmp", "w") as fh:
-            fh.write(str(os.path.getsize(plan.part)))
-        os.replace(plan.archive + ".size.tmp", plan.archive + ".size")
+        java_home, spark_home = plan.homes
+        meta = {"size": os.path.getsize(plan.part), "java_home": java_home,
+                "spark_home": spark_home}
+        with open(plan.archive + ".meta.tmp", "w") as fh:
+            json.dump(meta, fh)
+        os.replace(plan.archive + ".meta.tmp", plan.archive + ".meta")
         os.replace(plan.part, plan.archive)
-        cache_dir = os.path.dirname(plan.archive)
-        for other in glob.glob(os.path.join(cache_dir, "cds-*.jsa*")):
-            if not other.startswith(plan.archive):
+        for other in glob.glob(os.path.join(os.path.dirname(plan.archive), "cds-*.jsa*")):
+            other_archive = other[: other.index(".jsa") + len(".jsa")]
+            if other_archive != plan.archive and _orphaned(other_archive):
                 _unlink(other)
         return True
+    except OSError:
+        _unlink(plan.part, plan.archive + ".meta.tmp")
+        return False
     finally:
         _unlink(plan.lock)
 
@@ -346,7 +378,7 @@ def _launch(builder: SparkSession.Builder) -> SparkSession:
     if plan.part:
         atexit.register(_finish_training, proc, plan)
     elif plan.archive and not cds_is_mapped(proc.pid, plan.archive):
-        _unlink(plan.archive, plan.archive + ".size")
+        _unlink(plan.archive, plan.archive + ".meta")
         plan = plan._replace(state="off:unmapped")
     _CDS_STATE = plan.state
     return spark

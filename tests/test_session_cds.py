@@ -11,6 +11,7 @@ import glob
 import os
 import subprocess
 import sys
+import tempfile
 
 import pytest
 
@@ -138,19 +139,38 @@ def test_part_is_published_only_after_a_clean_exit(trees):
     assert not os.path.exists(plan.part) and not os.path.exists(plan.archive)
     assert not os.path.exists(plan.lock)
 
-    stale = os.path.join(cache, "cds-0123456789abcdef.jsa")
-    for p in (stale, stale + ".size"):
-        with open(p, "w") as fh:
-            fh.write("1")
     plan = session.cds_plan(cache, jdk, spark)
     with open(plan.part, "wb") as fh:
         fh.write(b"\0" * 100)
     session._finish_training(_fake_jvm(0), plan)
     assert os.path.getsize(plan.archive) == 100
-    with open(plan.archive + ".size") as fh:
-        assert fh.read() == "100"
+    assert session._read_meta(plan.archive) == {"size": 100, "java_home": jdk, "spark_home": spark}
     assert not os.path.exists(plan.part) and not os.path.exists(plan.lock)
-    assert not os.path.exists(stale) and not os.path.exists(stale + ".size")
+
+
+def test_publishing_keeps_other_installs_archives(trees, tmp_path):
+    """Two Spark installs share one cache: each keeps its archive while
+    its jars are there, and publishing deletes an archive whose install
+    is gone or unnamed."""
+    cache, jdk, spark = trees
+    other = tmp_path / "spark-other"
+    (other / "jars").mkdir(parents=True)
+    (other / "jars" / "spark-core.jar").write_bytes(b"another jar")
+    theirs = session.cds_plan(cache, jdk, str(other))
+    _train(theirs)
+    unnamed = os.path.join(cache, "cds-0123456789abcdef.jsa")
+    with open(unnamed, "w") as fh:
+        fh.write("1")
+    ours = session.cds_plan(cache, jdk, spark)
+    _train(ours)
+    assert os.path.exists(theirs.archive) and os.path.exists(theirs.archive + ".meta")
+    assert not os.path.exists(unnamed)
+    assert session.cds_plan(cache, jdk, str(other)).state == "mapped"
+
+    os.unlink(other / "jars" / "spark-core.jar")  # that install is removed
+    os.unlink(ours.archive)
+    _train(session.cds_plan(cache, jdk, spark))
+    assert not glob.glob(theirs.archive + "*")
 
 
 def test_conf_dir_with_a_real_file_is_off_conf(trees, monkeypatch):
@@ -162,12 +182,25 @@ def test_conf_dir_with_a_real_file_is_off_conf(trees, monkeypatch):
     assert session.cds_plan(cache, jdk, spark) == session.CdsPlan("off:conf")
 
 
+def test_unwritable_cache_dir_launches_plain(trees, tmp_path):
+    """A cache dir that cannot be made (a read-only or missing home)
+    gives ``off:cache``; the launch goes on without the archive."""
+    _cache, jdk, spark = trees
+    blocker = tmp_path / "not-a-dir"
+    blocker.write_text("")
+    assert session.cds_plan(str(blocker / "spark-graft"), jdk, spark) == session.CdsPlan("off:cache")
+
+
 def test_suite_session_maps_or_trains_the_archive(spark):
     from pyspark.find_spark_home import _find_spark_home
 
     state = session.cds_state()
     if state == "off:conf":
         assert not session._conf_is_default(_find_spark_home())
+    elif state == "off:cache":
+        with pytest.raises(OSError):
+            os.makedirs(session.cds_cache_dir(), exist_ok=True)
+            tempfile.TemporaryFile(dir=session.cds_cache_dir()).close()
     else:
         # off:busy: another process was writing this machine's archive
         assert state in ("mapped", "training", "off:busy"), state
