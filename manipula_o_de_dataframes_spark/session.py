@@ -311,6 +311,8 @@ def cds_publish(plan: CdsPlan, returncode: int | None) -> bool:
         os.replace(plan.archive + ".meta.tmp", plan.archive + ".meta")
         os.replace(plan.part, plan.archive)
         for other in glob.glob(os.path.join(os.path.dirname(plan.archive), "cds-*.jsa*")):
+            if other.endswith(".tmp"):  # another trainer's meta, not yet renamed
+                continue
             other_archive = other[: other.index(".jsa") + len(".jsa")]
             if other_archive != plan.archive and _orphaned(other_archive):
                 _unlink(other)

@@ -151,7 +151,7 @@ def test_part_is_published_only_after_a_clean_exit(trees):
 def test_publishing_keeps_other_installs_archives(trees, tmp_path):
     """Two Spark installs share one cache: each keeps its archive while
     its jars are there, and publishing deletes an archive whose install
-    is gone or unnamed."""
+    is gone or unnamed, but not a meta file another trainer is writing."""
     cache, jdk, spark = trees
     other = tmp_path / "spark-other"
     (other / "jars").mkdir(parents=True)
@@ -159,12 +159,14 @@ def test_publishing_keeps_other_installs_archives(trees, tmp_path):
     theirs = session.cds_plan(cache, jdk, str(other))
     _train(theirs)
     unnamed = os.path.join(cache, "cds-0123456789abcdef.jsa")
-    with open(unnamed, "w") as fh:
-        fh.write("1")
+    in_flight = os.path.join(cache, "cds-fedcba9876543210.jsa.meta.tmp")
+    for p in (unnamed, in_flight):
+        with open(p, "w") as fh:
+            fh.write("1")
     ours = session.cds_plan(cache, jdk, spark)
     _train(ours)
     assert os.path.exists(theirs.archive) and os.path.exists(theirs.archive + ".meta")
-    assert not os.path.exists(unnamed)
+    assert not os.path.exists(unnamed) and os.path.exists(in_flight)
     assert session.cds_plan(cache, jdk, str(other)).state == "mapped"
 
     os.unlink(other / "jars" / "spark-core.jar")  # that install is removed
