@@ -1043,7 +1043,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("__qv"),
     )
     scored = (
-        e.crossJoin(F.broadcast(q))
+        e.crossJoin(F.broadcast(q))  # bounded: 4 probe vectors (vec_id < 4)
         .filter(F.col("label") != F.col("query_label"))
         .select(
             "query_id",
@@ -1168,7 +1168,7 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_assigned"),
             F.max("__d").alias("coverage_radius"),
         )
-        .join(F.broadcast(center_tbl), F.col("__c") == F.col("center_idx"))
+        .join(F.broadcast(center_tbl), F.col("__c") == F.col("center_idx"))  # bounded: k = 4 centers
         .select(
             "center_idx",
             "center_vec_id",
@@ -2092,7 +2092,7 @@ def q_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("__rn") == F.expr("(95 * __n + 99) div 100"), F.col("value"))
         ).alias("__hi"),
     )
-    clipped = e.join(F.broadcast(bounds), "event_type").select(
+    clipped = e.join(F.broadcast(bounds), "event_type").select(  # bounded: 5 event types
         "event_type",
         "value",
         F.least(F.greatest(F.col("value"), F.col("__lo")), F.col("__hi")).alias("__w"),
@@ -2815,7 +2815,7 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+def kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative algorithm surface: 3 Lloyd rounds over embeddings.
 
     Driver-looped distributed passes (assign = centroid-literal map
@@ -3872,7 +3872,7 @@ def q_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("__p75") + 1.5 * (F.col("__p75") - F.col("__p25"))).alias("__hi"),
     )
     return (
-        e.join(F.broadcast(bounds), "event_type")
+        e.join(F.broadcast(bounds), "event_type")  # bounded: 5 event types
         .select(
             F.col("event_id").alias("evento"),
             F.col("event_type").alias("tipo"),
@@ -4072,7 +4072,7 @@ def q_truncated_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     approx = (
         e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(F.broadcast(q))  # bounded: one probe vector
         .select(
             "vec_id",
             cosine(F.slice("embedding", 1, dims_t), F.col("__qv")).alias("__c"),
@@ -5797,7 +5797,7 @@ def q_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for x in e.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     ]
     q = cells.filter(F.col("vec_id") == 0).select(F.col("cell").alias("__qc"))
-    cand = cells.crossJoin(F.broadcast(q)).filter(
+    cand = cells.crossJoin(F.broadcast(q)).filter(  # bounded: one probe vector
         (F.col("cell") == F.col("__qc")) & (F.col("vec_id") != 0)
     )
     adc = sim.pq_adc(F.col("embedding"), qvec, cb)
@@ -7206,7 +7206,7 @@ def q_zipf_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__mrn") == F.expr("(__cnt + 1) div 2"))
         .select(F.col("rf_product").alias("__med"))
     )
-    return top.crossJoin(F.broadcast(med)).select(
+    return top.crossJoin(F.broadcast(med)).select(  # bounded: one median row
         F.col("rank").cast("int").alias("rank"),
         "tok",
         F.col("freq").cast("long").alias("freq"),
@@ -7652,7 +7652,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = spool(
         e.groupBy("event_type").agg(F.percentile("cents", F.lit(0.5)).alias("med"))
     )
-    dev = e.join(F.broadcast(med), "event_type").withColumn(
+    dev = e.join(F.broadcast(med), "event_type").withColumn(  # bounded: 5 event types
         "adev", F.abs(F.col("cents").cast("double") - F.col("med"))
     )
     mad = spool(
@@ -7660,7 +7660,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.percentile("adev", F.lit(0.5)).alias("mad"), F.max("med").alias("med")
         )
     )
-    flagged = dev.drop("med").join(F.broadcast(mad), "event_type")
+    flagged = dev.drop("med").join(F.broadcast(mad), "event_type")  # bounded: 5 event types
     return (
         flagged.groupBy("event_type")
         .agg(
@@ -8670,8 +8670,8 @@ def q_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     aa = aud.select(F.col("event_type").alias("t_a"), F.col("n_aud").alias("n_a"))
     ab = aud.select(F.col("event_type").alias("t_b"), F.col("n_aud").alias("n_b"))
     return (
-        shared.join(F.broadcast(aa), "t_a")
-        .join(F.broadcast(ab), "t_b")
+        shared.join(F.broadcast(aa), "t_a")  # bounded: 5 event types
+        .join(F.broadcast(ab), "t_b")  # bounded: 5 event types
         .select(
             "t_a",
             "t_b",
@@ -9001,7 +9001,7 @@ def q_seasonal_band_breaches(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("cents").alias("p10_cents"), F.max("cents").alias("p90_cents"))
     )
     return (
-        test.join(F.broadcast(bands), "dow")
+        test.join(F.broadcast(bands), "dow")  # bounded: 7 weekdays
         .groupBy("dow")
         .agg(
             F.count(F.lit(1)).alias("n_days"),
@@ -10206,7 +10206,7 @@ def q_ltv_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         cells.withColumn("cum_cents", F.sum("rev_cents").over(wcum))
-        .join(F.broadcast(sizes), "__cohort")
+        .join(sizes, "__cohort")
         .select(
             F.col("__cohort").cast("long").alias("cohort_week"),
             F.col("age_weeks").cast("long").alias("age_weeks"),
@@ -10588,7 +10588,7 @@ def q_shapley_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     coal = spark.range(16).select(F.col("id").alias("smask"))
     v = (
         coal.join(
-            F.broadcast(census),
+            F.broadcast(census),  # bounded: 16 channel masks
             F.expr("tmask & ~smask") == 0,
             "left",
         )
@@ -10607,8 +10607,8 @@ def q_shapley_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(2)
     )
     phi = (
-        ch.join(F.broadcast(v0), F.expr("s0 & bit") == 0)
-        .join(F.broadcast(v1), F.col("s1") == F.col("s0") + F.col("bit"))
+        ch.join(F.broadcast(v0), F.expr("s0 & bit") == 0)  # bounded: 16 channel masks
+        .join(F.broadcast(v1), F.col("s1") == F.col("s0") + F.col("bit"))  # bounded: 16 channel masks
         .groupBy("channel", "bit")
         .agg(
             F.sum(w * (F.col("__v1") - F.col("__v0")))
@@ -10618,13 +10618,13 @@ def q_shapley_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = phi.agg(F.sum("credit_x24").alias("__t"))
     reach = (
-        ch.join(F.broadcast(census), F.expr("tmask & bit") != 0, "left")
+        ch.join(F.broadcast(census), F.expr("tmask & bit") != 0, "left")  # bounded: 16 channel masks
         .groupBy(F.col("channel").alias("__rc"))
         .agg(F.coalesce(F.sum("n_users"), F.lit(0)).alias("reach_users"))
     )
     return (
         phi.crossJoin(F.broadcast(total))
-        .join(F.broadcast(reach), F.col("channel") == F.col("__rc"))
+        .join(F.broadcast(reach), F.col("channel") == F.col("__rc"))  # bounded: 4 channels
         .select(
             "channel",
             "credit_x24",
@@ -12042,7 +12042,7 @@ def q_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.createDataFrame(
             [(cid, vec) for cid, vec in cents], "cid int, cemb array<float>"
         )
-        .crossJoin(F.broadcast(q))
+        .crossJoin(F.broadcast(q))  # bounded: one probe vector
         .select(
             "cid",
             F.row_number()
@@ -12055,9 +12055,9 @@ def q_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     scored = spool(
-        cells.join(F.broadcast(crank), F.col("__cell") == F.col("cid"))
+        cells.join(F.broadcast(crank), F.col("__cell") == F.col("cid"))  # bounded: 8 centroids
         .filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
+        .crossJoin(F.broadcast(q))  # bounded: one probe vector
         .select(
             "vec_id",
             "__crk",
@@ -12138,7 +12138,7 @@ def q_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("lang_a") < F.col("lang_b"))
     )
     a_side = census.join(
-        F.broadcast(pairs), census["lang"] == pairs["lang_a"]
+        F.broadcast(pairs), census["lang"] == pairs["lang_a"]  # bounded: 10 language pairs
     ).select(
         "lang_a",
         "lang_b",
@@ -12147,7 +12147,7 @@ def q_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("__cb"),
     )
     b_side = census.join(
-        F.broadcast(pairs), census["lang"] == pairs["lang_b"]
+        F.broadcast(pairs), census["lang"] == pairs["lang_b"]  # bounded: 10 language pairs
     ).select(
         "lang_a",
         "lang_b",
@@ -15257,7 +15257,7 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("cast(sum(__d) div count(1) as bigint)").alias("seasonal_milli"),
     )
     rem = (
-        detr.join(F.broadcast(seasonal), "dow_iso")
+        detr.join(F.broadcast(seasonal), "dow_iso")  # bounded: 7 weekdays
         .groupBy("dow_iso")
         .agg(
             F.expr(
@@ -16117,353 +16117,14 @@ def q_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The registry: every ``q_*`` function above under its name without the
+# prefix, plus the four plan entries. Its order is set below.
 QUERIES = {
-    # Dict order = the driver's ~50-row sampling order. Priority: (1)
-    # new in round 5 with NO driver row yet — the continuation batches
-    # (tpch classics, N125-N155) sit at positions ~9-45 so the ~50
-    # sample reaches them all; (2) earlier round-5 additions
-    # (positions 1-8 and 46+) — the sample tail covers some, r6
-    # rotates the rest forward; (3) round-5-changed then r1/r2-stale
-    # blocks; r3/r4-green rows last, freshest.
-    # --- new in round 5 (no driver row yet) ---
-    "holt_winters": q_holt_winters,
-    "forecast_pinball": q_forecast_pinball,
-    "stream_near_dup": q_stream_near_dup,
-    "roc_auc": q_roc_auc,
-    "seasonal_decompose": q_seasonal_decompose,
-    "ccf_weekly": q_ccf_weekly,
-    "bpe_fertility": q_bpe_fertility,
-    "corpus_health": q_corpus_health,
-    "acf_weekly": q_acf_weekly,
-    "duplicate_payments": q_duplicate_payments,
-    "link_prediction": q_link_prediction,
-    "sla_compliance": q_sla_compliance,
-    "weekly_ohlc": q_weekly_ohlc,
-    "vocab_growth": q_vocab_growth,
-    "burst_detection": q_burst_detection,
-    "isotonic_calibration": q_isotonic_calibration,
-    "km_survival": q_km_survival,
-    "order_reconciliation": q_order_reconciliation,
-    "inverted_index": q_inverted_index,
-    "entity_resolution": q_entity_resolution,
-    "bfs_distances": q_bfs_distances,
-    "experiment_report": q_experiment_report,
-    "quantile_treatment_effects": q_quantile_treatment_effects,
-    "srm_check": q_srm_check,
-    "cuped_adjustment": q_cuped_adjustment,
-    "t_closeness_audit": q_t_closeness_audit,
-    "gate_fairness_audit": q_gate_fairness_audit,
-    "cep_pattern_match": q_cep_pattern_match,
-    "stream_upsert": q_stream_upsert,
-    "join_order_audit": q_join_order_audit,
-    "restatement_audit": q_restatement_audit,
-    "burn_rate_alerts": q_burn_rate_alerts,
-    "incident_metrics": q_incident_metrics,
-    "source_shapley": q_source_shapley,
-    "max_coverage_select": q_max_coverage_select,
-    "pocock_monitor": q_pocock_monitor,
-    "ndcg_eval": q_ndcg_eval,
-    "bandit_replay": q_bandit_replay,
-    "diff_in_diff": q_diff_in_diff,
-    "runs_test": q_runs_test,
-    "mann_whitney_u": q_mann_whitney_u,
-    "kendall_tau": q_kendall_tau,
-    "spearman_corr": q_spearman_corr,
-    "chi2_terms": q_chi2_terms,
-    "stump_gate": q_stump_gate,
-    "half_sample_ci": q_half_sample_ci,
-    "forecast_tournament": q_forecast_tournament,
-    "sequence_mining": q_sequence_mining,
-    "ivf_probe_sweep": q_ivf_probe_sweep,
-    "banding_recall_audit": q_banding_recall_audit,
-    "conformal_coverage": q_conformal_coverage,
-    "brier_decomposition": q_brier_decomposition,
-    "survey_raking": q_survey_raking,
-    "littles_law_audit": q_littles_law_audit,
-    "credibility_smoothing": q_credibility_smoothing,
-    "mrr_waterfall": q_mrr_waterfall,
-    "fair_token_budget": q_fair_token_budget,
-    "mix_rate_bridge": q_mix_rate_bridge,
-    "behavioral_cohort": q_behavioral_cohort,
-    "neighborhood_function": q_neighborhood_function,
-    "association_rules": q_association_rules,
-    "rendezvous_sharding": q_rendezvous_sharding,
-    "markov_attribution": q_markov_attribution,
-    "hyperball_2hop": q_hyperball_2hop,
-    "weighted_sample": q_weighted_sample,
-    "shapley_channels": q_shapley_channels,
-    "rake_keywords": q_rake_keywords,
-    "quantile_normalize": q_quantile_normalize,
-    "apriori_triples": q_apriori_triples,
-    "activity_bitmaps": q_activity_bitmaps,
-    "leakage_safe_features": q_leakage_safe_features,
-    "rle_sort_key_planner": q_rle_sort_key_planner,
-    "tpch_q7": q_tpch_q7,
-    "tpch_q8": q_tpch_q8,
-    "tpch_q9": q_tpch_q9,
-    "tpch_q12": q_tpch_q12,
-    "tpch_q13": q_tpch_q13,
-    "tpch_q15": q_tpch_q15,
-    "tpch_q2": q_tpch_q2,
-    "tpch_q16": q_tpch_q16,
-    "tpch_q17": q_tpch_q17,
-    "tpch_q11": q_tpch_q11,
-    "tpch_q19": q_tpch_q19,
-    "tpch_q20": q_tpch_q20,
-    "tpch_q21": q_tpch_q21,
-    "tpch_q22": q_tpch_q22,
-    "stream_running_totals": q_stream_running_totals,
-    "capped_balance": q_capped_balance,
-    "ltv_cohorts": q_ltv_cohorts,
-    "topk_with_ties": q_topk_with_ties,
-    "state_snapshot_diff": q_state_snapshot_diff,
-    "zipf_audit": q_zipf_audit,
-    "tpch_q3": q_tpch_q3,
-    "tpch_q5": q_tpch_q5,
-    "tpch_q1": q_tpch_q1,
-    "tpch_q4": q_tpch_q4,
-    "tpch_q6": q_tpch_q6,
-    "tpch_q18": q_tpch_q18,
-    "source_overlap_matrix": q_source_overlap_matrix,
-    "zonemap_prune_audit": q_zonemap_prune_audit,
-    "mad_outliers": q_mad_outliers,
-    "bloom_join_prune": q_bloom_join_prune,
-    "fd_discovery": q_fd_discovery,
-    "l_diversity_audit": q_l_diversity_audit,
-    "interpolate_weeks": q_interpolate_weeks,
-    "mv_join_delta": q_mv_join_delta,
-    "theilsen_trend": q_theilsen_trend,
-    "ab_contingency_chi2": q_ab_contingency_chi2,
-    "event_paths": q_event_paths,
-    "conversion_latency": q_conversion_latency,
-    "backlog_aging": q_backlog_aging,
-    "stream_late_drop": q_stream_late_drop,
-    "embedding_dim_profile": q_embedding_dim_profile,
-    "range_split_points": q_range_split_points,
-    "grouping_sets_rollup": q_grouping_sets_rollup,
-    "weighted_median_price": q_weighted_median_price,
-    "twab_balance": q_twab_balance,
-    "order_count_gini": q_order_count_gini,
-    "ks_length_drift": q_ks_length_drift,
-    "scd2_pit_join": q_scd2_pit_join,
-    "audience_overlap": q_audience_overlap,
-    "event_cooccurrence": q_event_cooccurrence,
-    "rfm_migration": q_rfm_migration,
-    "shard_manifest": q_shard_manifest,
-    "decayed_item_rank": q_decayed_item_rank,
-    "position_attribution": q_position_attribution,
-    "session_depth_profile": q_session_depth_profile,
-    "seasonal_band_breaches": q_seasonal_band_breaches,
-    "rounding_drift_audit": q_rounding_drift_audit,
-    "tpch_q10": q_tpch_q10,
-    "tpch_q14": q_tpch_q14,
-    "naive_forecast_mape": q_naive_forecast_mape,
-    "abc_xyz_matrix": q_abc_xyz_matrix,
-    "same_customer_growth": q_same_customer_growth,
-    "attribution_stream_wm": q_attribution_stream_wm,
-    "holt_trend": q_holt_trend,
-    "transition_steady_state": q_transition_steady_state,
-    "discount_elasticity": q_discount_elasticity,
-    "hazard_weekly": q_hazard_weekly,
-    "key_gap_islands": q_key_gap_islands,
-    "join_size_estimate": q_join_size_estimate,
-    "weekday_seasonality": q_weekday_seasonality,
-    "prefix_jaccard_join": q_prefix_jaccard_join,
-    "revenue_recognition": q_revenue_recognition,
-    "open_order_concurrency": q_open_order_concurrency,
-    "pareto_frontier": q_pareto_frontier,
-    "column_profile": q_column_profile,
-    "mv_refresh": q_mv_refresh,
-    "winnow_near_dup": q_winnow_near_dup,
-    "label_propagation": q_label_propagation,
-    "trust_propagation": q_trust_propagation,
-    "cdc_chunk_dedup": q_cdc_chunk_dedup,
-    "ewma_weekly": q_ewma_weekly,
-    "kcore_peel": q_kcore_peel,
-    "benford_audit": q_benford_audit,
-    "balanced_shards": q_balanced_shards,
-    "kcenter_coreset": q_kcenter_coreset,
-    "triangle_counts": q_triangle_counts,
-    "maxsim_search": q_maxsim_search,
-    "keyset_page": q_keyset_page,
-    "event_value_by_nation": q_event_value_by_nation,
-    "enrich_stream": q_enrich_stream,
-    "pagerank_items": q_pagerank_items,
-    "prefix_dup_groups": q_prefix_dup_groups,
-    "winsorized_stats": q_winsorized_stats,
-    # --- changed in round 5 ---
-    "join_skew_profile": q_join_skew_profile,
-    "drift_weekly_kl": q_drift_weekly_kl,
-    "drift_stream": q_drift_stream,
-    "dsir_weights": q_dsir_weights,
-    "ngram_lm_score": q_ngram_lm_score,
-    "semantic_dedup": q_semantic_dedup,
-    "growth_accounting": q_growth_accounting,
-    "pq_codes": q_pq_codes,
-    "pq_topk": q_pq_topk,
-    "pq_serve": q_pq_serve,
-    "pq_recall": q_pq_recall,
-    "ivf_pq_topk": q_ivf_pq_topk,
-    "kmeans_assign": q_kmeans_assign,
-    "ivf_topk": q_ivf_topk,
-    "dedup_clusters": q_dedup_clusters,
-    "dedup_survivors": q_dedup_survivors,
-    "corpus_pipeline": q_corpus_pipeline,
-    # --- newest green row is r1 ---
-    "multimodal_frames": q_multimodal_frames,
-    "tfidf_top_term": q_tfidf_top_term,
-    "top_bigrams": q_top_bigrams,
-    "date_slice_metrics": q_date_slice_metrics,
-    "skewed_flag_history": q_skewed_flag_history,
-    "weekly_snapshots": q_weekly_snapshots,
-    "dashboard_serve": q_dashboard_serve,
-    "pending_stream": q_pending_stream,
-    "clean_pipeline": q_clean_pipeline,
-    "embedding_near_dup": q_embedding_near_dup,
-    # --- newest green row is r2 ---
-    "sales_cube": q_sales_cube,
     "product_client_history": product_client_history,
-    "top_k_customers": q_top_k_customers,
     "abc_classification": abc_classification,
     "abc_classification_scaled": abc_classification_scaled,
     "pending_by_week": pending_by_week,
-    "customer_multi_agg": q_customer_multi_agg,
-    "first_order_per_customer": q_first_order_per_customer,
-    "dedup_keep_first": q_dedup_keep_first,
-    "anti_join_unmatched": q_anti_join_unmatched,
-    "enrich_left_join": q_enrich_left_join,
-    "enrich_unique_left": q_enrich_unique_left,
-    "lenient_dates": q_lenient_dates,
-    "dynamic_filters": q_dynamic_filters,
-    "paginate_orders": q_paginate_orders,
-    "union_by_name": q_union_by_name,
-    "null_diagnostics": q_null_diagnostics,
-    "all_equal_collapse": q_all_equal_collapse,
-    "format_currency": q_format_currency,
-    "distinct_combinations": q_distinct_combinations,
-    "sorted_distinct_weeks": q_sorted_distinct_weeks,
-    "projection_ops": q_projection_ops,
-    "join_compatibility": q_join_compatibility,
-    "sessionize_events": q_sessionize_events,
-    "sessionize_native": q_sessionize_native,
-    "weekly_deltas": q_weekly_deltas,
-    "events_pivot": q_events_pivot,
-    "events_unpivot": q_events_unpivot,
-    "sales_rollup": q_sales_rollup,
-    "tuple_render": q_tuple_render,
-    "group_median_pandas": q_group_median_pandas,
-    "events_summary": q_events_summary,
-    "text_stats": q_text_stats,
-    "doc_dedup_exact": q_doc_dedup_exact,
-    "minhash_signatures": q_minhash_signatures,
-    "near_dup_jaccard": q_near_dup_jaccard,
-    "simhash": q_simhash,
-    "simhash_near_dup": q_simhash_near_dup,
-    "embedding_topk": q_embedding_topk,
-    "embedding_lsh_buckets": q_embedding_lsh_buckets,
-    "embedding_lsh_topk": q_embedding_lsh_topk,
-    "embedding_batch_topk": q_embedding_batch_topk,
-    "corpus_filter": q_corpus_filter,
-    "train_split": q_train_split,
-    "gopher_quality": q_gopher_quality,
-    "event_attribution": q_event_attribution,
-    "attribution_stream": q_attribution_stream,
-    "neighbor_counts": q_neighbor_counts,
-    "events_rollup": q_events_rollup,
-    # --- green in r3/r4 — freshest, sample last ---
-    "containment_near_dup": q_containment_near_dup,
-    "boilerplate_ngrams": q_boilerplate_ngrams,
-    "gapfill_weeks": q_gapfill_weeks,
-    "grouped_split": q_grouped_split,
-    "hard_negatives": q_hard_negatives,
-    "basket_pairs": q_basket_pairs,
-    "rfm_segments": q_rfm_segments,
-    "embedding_drift": q_embedding_drift,
-    "token_budget_select": q_token_budget_select,
-    "share_of_parent": q_share_of_parent,
-    "repeat_purchase_gap": q_repeat_purchase_gap,
-    "event_transitions": q_event_transitions,
-    "vocab_coverage": q_vocab_coverage,
-    "weekly_trend": q_weekly_trend,
-    "changepoint_weeks": q_changepoint_weeks,
-    "curriculum_order": q_curriculum_order,
-    "quality_calibration": q_quality_calibration,
-    "label_centroids": q_label_centroids,
-    "histogram_quantiles": q_histogram_quantiles,
-    "k_anonymity_audit": q_k_anonymity_audit,
-    "dedup_weights": q_dedup_weights,
-    "contract_checks": q_contract_checks,
-    "bpe_apply": q_bpe_apply,
-    "adaptive_quality_gate": q_adaptive_quality_gate,
-    "quality_logistic": q_quality_logistic,
-    "bpe_merges": q_bpe_merges,
-    "langid_confusion": q_langid_confusion,
-    "rrf_hybrid_search": q_rrf_hybrid_search,
-    "pmi_collocations": q_pmi_collocations,
-    "bloom_decontaminate": q_bloom_decontaminate,
-    "cross_doc_block_dedup": q_cross_doc_block_dedup,
-    "countmin_heavy_hitters": q_countmin_heavy_hitters,
-    "audio_chunk_near_dup": q_audio_chunk_near_dup,
-    "strip_repeated_blocks": q_strip_repeated_blocks,
-    "edit_distance_near_dup": q_edit_distance_near_dup,
-    "multimodal_near_dup": q_multimodal_near_dup,
-    "token_profile": q_token_profile,
-    "decontaminate": q_decontaminate,
-    "price_bands": q_price_bands,
-    "value_percentiles": q_value_percentiles,
-    "sliding_active_users": q_sliding_active_users,
-    "outlier_flags": q_outlier_flags,
-    "json_props": q_json_props,
-    "topk_per_group": q_topk_per_group,
-    "stream_dedup": q_stream_dedup,
-    "salted_join": q_salted_join,
-    "upsert": q_upsert,
-    "hll_mergeable": q_hll_mergeable,
-    "normalize_text": q_normalize_text,
-    "corpus_mix": q_corpus_mix,
-    "multimodal_chunks": q_multimodal_chunks,
-    "sql_frontdoor": q_sql_frontdoor,
-    "fingerprint_dedup": q_fingerprint_dedup,
-    "stratified_docs": q_stratified_docs,
-    "multimodal_embed": q_multimodal_embed,
-    "lsh_recall": q_lsh_recall,
-    "embedding_near_dup_blocked": q_embedding_near_dup_blocked,
-    "near_dup_jaccard_banded": q_near_dup_jaccard_banded,
-    "multimodal_features": q_multimodal_features,
-    "revenue_by_nation": q_revenue_by_nation,
-    "multimodal_resize": q_multimodal_resize,
-    "temperature_mix": q_temperature_mix,
-    "scd2_dim": q_scd2_dim,
-    "conversion_forward": q_conversion_forward,
-    "rolling_user_spend": q_rolling_user_spend,
-    "sessionize_stream": q_sessionize_stream,
-    "incremental_dedup": q_incremental_dedup,
-    "zorder_keys": q_zorder_keys,
-    "events_sketches": q_events_sketches,
-    "bm25_search": q_bm25_search,
-    "chunk_documents": q_chunk_documents,
-    "balance_sources": q_balance_sources,
-    "contamination_rate": q_contamination_rate,
-    "session_funnel": q_session_funnel,
-    "retention_cohorts": q_retention_cohorts,
-    "truncated_recall": q_truncated_recall,
-    "fk_conformance": q_fk_conformance,
-    "pii_scrub": q_pii_scrub,
-    "pack_sequences": q_pack_sequences,
-    "repetition_signals": q_repetition_signals,
-    "embedding_quantize": q_embedding_quantize,
-    "dedup_rate_by_source": q_dedup_rate_by_source,
-    "excel_ingest": q_excel_ingest,
-    "excel_ingest_distributed": q_excel_ingest_distributed,
-    "exact_substr_dedup": q_exact_substr_dedup,
-    "cluster_safe_split": q_cluster_safe_split,
-    "good_turing_mass": q_good_turing_mass,
-    "neyman_allocation": q_neyman_allocation,
-    "ipw_ate": q_ipw_ate,
-    "mantel_haenszel": q_mantel_haenszel,
-    "schema_evolution_ingest": q_schema_evolution_ingest,
-    "cmh_test": q_cmh_test,
-    "kish_ess": q_kish_ess,
+    **{k[2:]: v for k, v in list(globals().items()) if k.startswith("q_") and callable(v)},
 }
 
 # The driver verifies roughly the FIRST 50 entries each round, so dict

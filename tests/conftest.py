@@ -19,34 +19,3 @@ def spark():
     s = get_spark("tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
-
-def pytest_collection_modifyitems(config, items):
-    """Opt-in sharding for the suite (VERDICT r5 #8): with
-    ``SPARK_GRAFT_TEST_SHARD=i/N`` set, keep only the items whose
-    stable key hashes to shard i. The key is the parametrized query
-    name when present (so the 318-query parity gate spreads evenly)
-    else the test file name (so a whole file's session fixtures stay
-    in one process). tools/run_tests_sharded.py launches N pytest
-    subprocesses with this env var; without it the suite runs whole,
-    exactly as before."""
-    import zlib
-
-    shard = os.environ.get("SPARK_GRAFT_TEST_SHARD")
-    if not shard:
-        return
-    i, n = (int(x) for x in shard.split("/"))
-    if not (n > 0 and 0 <= i < n):
-        raise pytest.UsageError(
-            f"SPARK_GRAFT_TEST_SHARD={shard!r} out of range: need 0 <= i < n "
-            "— a bad shard index would silently collect an empty shard "
-            "(r6 ADVICE)"
-        )
-    keep = []
-    for item in items:
-        _, _, param = item.name.partition("[")
-        key = param.rstrip("]") if param else os.path.basename(str(item.fspath))
-        if zlib.crc32(key.encode()) % n == i:
-            keep.append(item)
-    kept = set(keep)
-    config.hook.pytest_deselected(items=[x for x in items if x not in kept])
-    items[:] = keep

@@ -1267,10 +1267,10 @@ def test_kmeans_training_rows_only(spark):
     loop's invariants live here instead: 3 Lloyd rounds over the
     fixture embeddings produce ≤k non-empty cells whose occupancy
     sums to the corpus size."""
-    from manipula_o_de_dataframes_spark.queries import q_kmeans_cells
+    from manipula_o_de_dataframes_spark.queries import kmeans_cells
     from tests.conftest import SF_SMOKE
 
-    out = q_kmeans_cells(spark, SF_SMOKE).collect()
+    out = kmeans_cells(spark, SF_SMOKE).collect()
     assert 0 < len(out) <= 8
     assert set(out[0].asDict().keys()) == {"cell", "n_vetores"}
     n = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").count()

@@ -169,44 +169,6 @@ def test_bench_report_tail_is_generated_from_artifact(tmp_path):
     assert bench_report.report(str(p)).splitlines()[1] == ">5 s tail: none"
 
 
-def test_bench_report_surfaces_mid_sweep_probe_max(tmp_path):
-    """The r10 probe timeline (a machine-load reading every 50
-    queries) must surface in the headline: the end probes are blind
-    to bursts that arrive and decay inside the sweep, so the report
-    names the worst mid-sweep reading and its query position."""
-    import json
-    import sys
-
-    sys.path.insert(0, "tools")
-    import bench_report
-
-    art = {
-        "queries": {"fast_one": 0.2},
-        "spool_build_seconds": {},
-        "machine_probe_seconds": [0.15, 0.14],
-        "machine_probe_timeline": [[50, 0.16], [100, 2.31], [150, 0.15]],
-        "sf": 0.1,
-    }
-    p = tmp_path / "b.json"
-    p.write_text(json.dumps(art))
-    head = bench_report.report(str(p)).splitlines()[0]
-    assert "mid-sweep probe max 2.31 s at query 100" in head
-    # 3-element entries carry the I/O probe (post-capture-4 format);
-    # the worst I/O reading surfaces independently of the worst CPU one
-    art["machine_probe_timeline"] = [[50, 0.16, 0.4], [100, 2.31, 0.5], [150, 0.15, 3.7]]
-    art["machine_io_probe_seconds"] = [0.45, 0.41]
-    p.write_text(json.dumps(art))
-    head = bench_report.report(str(p)).splitlines()[0]
-    assert "mid-sweep probe max 2.31 s at query 100" in head
-    assert "io probe max 3.70 s at query 150" in head
-    assert "io probe 0.45/0.41 s" in head
-    # absent timeline (pre-r10 artifact): headline renders without it
-    del art["machine_probe_timeline"]
-    del art["machine_io_probe_seconds"]
-    p.write_text(json.dumps(art))
-    assert "mid-sweep" not in bench_report.report(str(p))
-
-
 def test_capture_compare_reports_1p4x_regressions(tmp_path, capsys):
     """VERDICT r9 #1: cross-ROUND regressions at 1.4–2x must surface
     even when they stay inside the 2x noise band."""

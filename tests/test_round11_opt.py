@@ -20,7 +20,9 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _PKG = os.path.join(_REPO, "manipula_o_de_dataframes_spark")
 
 # Names that, throughout this codebase, hold data-proportional frames
-# (base TPC-H tables or frames derived 1:1 from them). The AST pass
+# (base TPC-H tables or frames derived 1:1 from them); a
+# ``read_table*`` scan of any table but nation or region seeds the
+# same way, whatever name it is bound to. The AST pass
 # below walks each function in statement order: a seed name holds an
 # unbounded frame unless it is bound to a literal or a one-row
 # reduction, and any other name holds one when it is bound to an
@@ -44,6 +46,9 @@ _KEEPS_ROWS = frozenset({
     "withColumnRenamed", "drop", "alias",
 })
 _GENERATORS = ("explode", "inline", "stack")
+# Every ``read_table*`` scan is a data-proportional frame, whatever name
+# it is bound to, unless each table it reads is one of these.
+_BOUNDED_TABLES = frozenset({"nation", "region"})
 _BOUNDED_TAG = re.compile(r"#\s*bounded:\s*\S")
 # The line patterns of the first version of this guard, kept as a floor:
 # F.broadcast(c) / F.broadcast(customer, ...), and F.broadcast(c.select(...)).
@@ -91,14 +96,31 @@ def _reduces(expr) -> bool:
     return True
 
 
+def _scans_table(expr) -> bool:
+    """True when ``expr`` is a ``read_table*`` call whose table names are
+    not all constants in ``_BOUNDED_TABLES``."""
+    func = expr.func if isinstance(expr, ast.Call) else None
+    name = getattr(func, "id", None) or getattr(func, "attr", "")
+    if not name.startswith("read_table"):
+        return False
+    tables = expr.args[2:] if name == "read_tables" else expr.args[2:3]
+    tables += [k.value for k in expr.keywords if k.arg == "name"]
+    return not tables or not all(
+        isinstance(t, ast.Constant) and t.value in _BOUNDED_TABLES for t in tables
+    )
+
+
 def _over(expr, unbounded) -> bool:
-    """True when ``expr`` reads an unbounded name (not one a comprehension
-    inside it binds) and does not reduce."""
+    """True when ``expr`` scans an unbounded table or reads an unbounded
+    name (not one a comprehension inside it binds), and does not reduce."""
     if _reduces(expr):
         return False
     nodes = list(ast.walk(expr))
     local = {nm for n in nodes if isinstance(n, ast.comprehension) for nm in _names(n.target)}
-    return any(isinstance(n, ast.Name) and n.id in unbounded - local for n in nodes)
+    return any(
+        (isinstance(n, ast.Name) and n.id in unbounded - local) or _scans_table(n)
+        for n in nodes
+    )
 
 
 def _bind(target, value, unbounded) -> None:
@@ -241,17 +263,36 @@ def q(spark, sf_dir, cols):
     ]
 
 
+def test_broadcast_guard_seeds_table_scans():
+    src = """
+def q(spark, sf_dir, t):
+    ev = read_table(spark, sf_dir, "events")
+    n = read_table(spark, sf_dir, "nation")
+    per_type = ev.groupBy("event_type").agg(F.count("k"))
+    a = x.join(F.broadcast(per_type), "k").join(F.broadcast(n), "k")
+    b = x.join(F.broadcast(read_table_parallel(spark, sf_dir, t)), "k")
+    d = x.join(F.broadcast(per_type), "k")  # bounded: 5 event types
+    return x.crossJoin(F.broadcast(ev.agg(F.count("k"))))
+"""
+    assert [(line, arg) for _fn, line, arg in unbounded_broadcasts(src)] == [
+        (6, "per_type"), (7, "read_table_parallel(spark, sf_dir, t)"),
+    ]
+
+
 def test_broadcast_guard_keeps_the_first_versions_lines():
     src = "def q(c):\n    c = 1\n    return x.join(F.broadcast(c), 'k')\n"
     assert [line for _fn, line, _arg in unbounded_broadcasts(src)] == [3]
 
 
-@pytest.mark.parametrize("name", ["join_order_audit", "association_rules", "hyperball_2hop"])
+@pytest.mark.parametrize(
+    "name", ["join_order_audit", "association_rules", "hyperball_2hop", "ltv_cohorts"]
+)
 def test_rewritten_queries_match_oracle_at_sf0_01(spark, name):
     """Oracle rows at sf0.01 for the queries whose plans changed:
     ``join_order_audit`` lost its hint on customer⋈nation,
     ``association_rules`` its hints on the per-part item census, and
-    ``hyperball_2hop`` counts its degree over the spooled HyperBall input
+    ``hyperball_2hop`` counts its degree over the spooled HyperBall input,
+    and ``ltv_cohorts`` lost its hint on the per-cohort-week sizes
     (sf0.001 is covered by the parity suite)."""
     from manipula_o_de_dataframes_spark.oracles import ORACLES
     from manipula_o_de_dataframes_spark.parity import compare, run_oracle

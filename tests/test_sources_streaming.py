@@ -464,10 +464,7 @@ def test_distributed_excel_ingest_survives_foreign_cwd_driver(tmp_path):
         print("FOREIGN_CWD_OK")
         """
     )
-    env = {
-        k: v for k, v in os.environ.items()
-        if k not in ("PYTHONPATH", "SPARK_GRAFT_TEST_SHARD")
-    }
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     p = subprocess.run(
         [sys.executable, "-c", script],
         cwd=str(tmp_path), env=env, capture_output=True, text=True, timeout=300,

@@ -6,7 +6,10 @@ the row was typed next to the artifact instead of generated from it.
 This script IS the generator: it recomputes the headline total with the
 exact accounting bench.py uses (sum of per-query mins excluding the two
 permissive contrast fixtures, plus the spool-build total) and prints a
-paste-ready SURVEY line. The SURVEY close row must byte-match:
+paste-ready SURVEY line. With the PROFILE file bench.py writes beside
+the artifact, it also prints the sweep's host steal and the 20 queries
+with the most Spark stages per run. The SURVEY close row must
+byte-match:
 
     python tools/bench_report.py BENCH_full.json
 """
@@ -14,6 +17,7 @@ paste-ready SURVEY line. The SURVEY close row must byte-match:
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 BASELINE_FIXTURES = ("near_dup_jaccard", "embedding_near_dup")
@@ -55,34 +59,8 @@ def report(path: str) -> str:
     )
     total = round(scale_path + spool_total, 1)
     fixtures = round(sum(q.get(k, 0.0) for k in BASELINE_FIXTURES), 2)
-    probes = art.get("machine_probe_seconds")
-    probe_txt = (
-        f"machine probe {probes[0]:.2f}/{probes[1]:.2f} s"
-        if probes
-        else "machine probe n/a"
-    )
-    # Mid-sweep probe timeline (r10): the end probes are blind to
-    # bursts that arrive and decay inside the sweep, so the capture
-    # carries a reading every 50 queries; a spiked max localizes the
-    # burst to a ~50-query window by position. Entries are
-    # [position, cpu] or [position, cpu, io] — the I/O probe was
-    # added after capture 4 proved disk contention invisible to the
-    # CPU reading (25% slow sweep, every CPU reading clean).
-    timeline = art.get("machine_probe_timeline")
-    if timeline:
-        worst = max(timeline, key=lambda p: p[1])
-        probe_txt += (
-            f"; mid-sweep probe max {worst[1]:.2f} s at query {worst[0]}"
-        )
-        with_io = [p for p in timeline if len(p) > 2]
-        if with_io:
-            worst_io = max(with_io, key=lambda p: p[2])
-            probe_txt += (
-                f"; io probe max {worst_io[2]:.2f} s at query {worst_io[0]}"
-            )
-    io_ends = art.get("machine_io_probe_seconds")
-    if io_ends:
-        probe_txt += f"; io probe {io_ends[0]:.2f}/{io_ends[1]:.2f} s"
+    prof = load_profile(path)
+    steal_txt = f"steal {prof['steal_s']:.1f} s" if prof else "steal n/a (no profile)"
     noisy = art.get("noisy_entries_runs", {})
     noisy_txt = (
         f"{len(noisy)} min-of-3 entries ({', '.join(sorted(noisy))})"
@@ -93,20 +71,47 @@ def report(path: str) -> str:
     head = (
         f"{total} s = {scale_path} query + {spool_total} spool over "
         f"{n} scale-path queries at sf{art.get('sf')}; "
-        f"baseline fixtures {fixtures} s; {probe_txt}; {noisy_txt}"
+        f"baseline fixtures {fixtures} s; {steal_txt}; {noisy_txt}"
     )
     tail = sorted(
         ((k, v) for k, v in q.items() if k not in BASELINE_FIXTURES and v > 5.0),
         key=lambda kv: -kv[1],
     )
-    if not tail:
-        return head + "\n>5 s tail: none"
-    lines = [f">5 s tail ({len(tail)} entries):"]
+    lines = [head, f">5 s tail ({len(tail)} entries):" if tail else ">5 s tail: none"]
     for k, v in tail:
         lines.append(
             f"  {k} {v:.2f} s — {TAIL_PRICING.get(k, 'UNPRICED (close-gate flag: isolated re-time + price or rewrite)')}"
         )
-    return head + "\n" + "\n".join(lines)
+    if prof:
+        lines += stages_table(prof["rows"], q)
+    return "\n".join(lines)
+
+
+def load_profile(bench_path: str) -> dict | None:
+    """The PROFILE file bench.py wrote beside ``bench_path``, if any."""
+    d, name = os.path.split(bench_path)
+    try:
+        with open(os.path.join(d, "PROFILE_" + name.removeprefix("BENCH_"))) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return None
+
+
+def stages_table(rows: dict, queries, top: int = 20) -> list[str]:
+    """The ``top`` queries by Spark stages per timed run, from the
+    profile's rows (each row sums the query's 2-3 runs)."""
+    per_run = {
+        k: {f: r[f] / r["runs"] for f in ("stages", "tasks", "jobs", "executor_cpu_s")}
+        for k, r in rows.items() if k in queries and r["runs"]
+    }
+    ranked = sorted(per_run.items(), key=lambda kv: (-kv[1]["stages"], kv[0]))[:top]
+    lines = [f"top {len(ranked)} queries by stages per run (stages, tasks, jobs, executor cpu s):"]
+    for k, r in ranked:
+        lines.append(
+            f"  {k} {r['stages']:.0f} stages, {r['tasks']:.0f} tasks, "
+            f"{r['jobs']:.0f} jobs, {r['executor_cpu_s']:.2f} cpu s"
+        )
+    return lines
 
 
 if __name__ == "__main__":
