@@ -2,10 +2,7 @@ from .formatting import (  # noqa: F401
     brl,
     pct,
     week_label,
-    render_list,
     parse_date,
-    format_date,
-    to_number,
     dsum,
     dsum_dec,
 )

@@ -83,25 +83,7 @@ def week_label(idx_col) -> Column:
     )
 
 
-def render_list(col, sep: str = ", ") -> Column:
-    """X5: array → human string, elements stringified first (MAC:711)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.array_join(F.transform(c, lambda x: x.cast("string")), sep)
-
-
 def parse_date(col, fmt: str | None = None) -> Column:
     """X6: lenient date parse — null on failure (= errors='coerce', APC:261)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.try_to_timestamp(c, F.lit(fmt)) if fmt else F.try_to_timestamp(c)
-
-
-def format_date(col, fmt: str = "yyyy-MM-dd") -> Column:
-    """X7: timestamp → string (strftime parity; APC:210 uses dd/MM/yyyy)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, fmt)
-
-
-def to_number(col) -> Column:
-    """X9: numeric coercion, null on failure (pd.to_numeric errors='coerce')."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("double")

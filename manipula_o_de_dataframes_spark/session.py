@@ -67,6 +67,7 @@ def get_spark(
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     parts = str(shuffle_partitions or cpus)
+    driver_mem = _default_driver_mem()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -75,7 +76,7 @@ def get_spark(
         # machine is loaded (measured: a 24M-row sort-merge join OOMs).
         # Only effective at JVM launch, so it must be set here, not after
         # the first session exists (getOrCreate ignores it then).
-        .config("spark.driver.memory", _default_driver_mem())
+        .config("spark.driver.memory", driver_mem)
         .config("spark.sql.shuffle.partitions", parts)
         # saveAsTable targets (bucketed tables) land in a temp warehouse,
         # never in the repo working tree.
@@ -107,7 +108,7 @@ def get_spark(
     )
     if SparkContext._gateway is not None:  # the JVM is already up
         return builder.getOrCreate()
-    return _launch(builder)
+    return _launch(builder, driver_mem)
 
 
 # --- class-data sharing (AppCDS) for the driver JVM ---------------------
@@ -129,10 +130,15 @@ def get_spark(
 #   path, and ``spark-class`` puts the conf dir there, so both training
 #   and mapping launches point ``SPARK_CONF_DIR`` at an empty directory;
 # - ``-Xshare:auto`` skips a stale archive silently, so the launch reads
-#   the JVM's memory map and deletes an archive that was not mapped.
+#   the JVM's memory map and deletes an archive that was not mapped;
+# - a heap of 32 GiB or more turns off compressed pointers, and such a
+#   JVM refuses an archive trained without them, so a big-heap launch
+#   runs plain and leaves the archive to the next normal launch.
 
 _CDS_STATE = "off:unlaunched"
 _TRAIN_WAIT_S = 60  # bounded wait at exit for the JVM to write its archive
+_OOPS_HEAP_LIMIT = 32 << 30  # the JVM turns off compressed pointers at this heap
+_MEM_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
 
 
 class CdsPlan(NamedTuple):
@@ -148,8 +154,8 @@ class CdsPlan(NamedTuple):
 def cds_state() -> str:
     """What the running driver JVM got: ``mapped``, ``training`` (it
     writes the archive at exit) or ``off:<reason>``, the reason one of
-    ``conf``, ``jdk``, ``cache``, ``busy``, ``unmapped``, ``gateway``,
-    ``unlaunched``
+    ``conf``, ``heap``, ``jdk``, ``cache``, ``busy``, ``unmapped``,
+    ``gateway``, ``unlaunched``
     (README, "Cold start")."""
     return _CDS_STATE
 
@@ -244,11 +250,25 @@ def _read_meta(archive: str) -> dict:
         return json.load(fh)
 
 
-def cds_plan(cache_dir: str, java_home: str | None, spark_home: str) -> CdsPlan:
-    """Decide how the next driver JVM launches: map the archive, train it
-    (taking the key's lock), or launch plain with the reason."""
+def _heap_bytes(driver_mem: str) -> int:
+    """Bytes of a ``spark.driver.memory`` value (``4g``, ``512m``,
+    ``40gb``; a bare number is MiB, as Spark reads it)."""
+    v = driver_mem.strip().lower().removesuffix("b")
+    if v[-1:] in _MEM_UNITS:
+        return int(v[:-1]) * _MEM_UNITS[v[-1]]
+    return int(v) << 20
+
+
+def cds_plan(
+    cache_dir: str, java_home: str | None, spark_home: str, driver_mem: str = "1g"
+) -> CdsPlan:
+    """Decide how the next driver JVM launches, with a heap of
+    ``driver_mem``: map the archive, train it (taking the key's lock), or
+    launch plain with the reason."""
     if not _conf_is_default(spark_home):
         return CdsPlan("off:conf")
+    if _heap_bytes(driver_mem) >= _OOPS_HEAP_LIMIT:
+        return CdsPlan("off:heap")
     try:
         key = cds_key(java_home or "", spark_home)
     except OSError:
@@ -354,8 +374,9 @@ def _finish_training(proc: subprocess.Popen, plan: CdsPlan) -> None:
     cds_publish(plan, proc.returncode)
 
 
-def _launch(builder: SparkSession.Builder) -> SparkSession:
-    """Launch the driver JVM with the class-data-sharing plan."""
+def _launch(builder: SparkSession.Builder, driver_mem: str) -> SparkSession:
+    """Launch the driver JVM, with a heap of ``driver_mem``, under the
+    class-data-sharing plan."""
     global _CDS_STATE
     from pyspark import SparkContext  # noqa: PLC0415
     from pyspark.find_spark_home import _find_spark_home  # noqa: PLC0415
@@ -363,7 +384,7 @@ def _launch(builder: SparkSession.Builder) -> SparkSession:
     if "PYSPARK_GATEWAY_PORT" in os.environ:
         _CDS_STATE = "off:gateway"
         return builder.getOrCreate()
-    plan = cds_plan(cds_cache_dir(), _java_home(), _find_spark_home())
+    plan = cds_plan(cds_cache_dir(), _java_home(), _find_spark_home(), driver_mem)
     if plan.java_opts:
         builder = builder.config("spark.driver.extraJavaOptions", plan.java_opts)
         os.environ["SPARK_CONF_DIR"] = plan.conf_dir

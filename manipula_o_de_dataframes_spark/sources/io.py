@@ -380,25 +380,28 @@ def from_records(spark: SparkSession, records: list[dict], schema=None) -> DataF
     return spark.createDataFrame(records, schema=schema)
 
 
-def write_bucketed(
-    df: DataFrame, table: str, key: str, n_buckets: int, sort: bool = True
-) -> None:
-    """S13: bucketed managed table — the co-located-join layout.
+def write_bucketed(df: DataFrame, table: str, key: str, n_buckets: int) -> None:
+    """S13/S17: bucketed, bucket-sorted managed table — the co-located-join
+    layout.
 
     Hash-bucketing both sides of a recurring join on the join key (same
-    bucket count) pre-pays the shuffle ONCE at write time: Spark's scan
-    reports the bucketing as its output partitioning, so a join of two
-    co-bucketed tables plans with NO Exchange on either side (asserted
-    from the physical plan in tests). At 100 TB this is the difference
-    between re-shuffling the fact table on every run of a daily join
-    and never shuffling it again; ``sortBy`` additionally pre-sorts
-    each bucket so single-file buckets skip the sort phase too.
-    Lands in the session's temp warehouse (session.py), never the repo.
+    bucket count) pre-pays the shuffle ONCE at write time: every reader
+    sees an output partitioning of ``hashpartitioning(key, n_buckets)``,
+    so a join of two co-bucketed tables plans with NO Exchange on either
+    side (asserted from the physical plan in tests). At 100 TB this is
+    the difference between re-shuffling the fact table on every run of a
+    daily join and never shuffling it again; ``sortBy`` additionally
+    pre-sorts each bucket so single-file buckets skip the sort phase
+    too. Uses Spark's built-in catalog (no Hive required) and lands in
+    the session's temp warehouse (session.py), never the repo.
     """
-    w = df.write.bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.mode("overwrite").format("parquet").saveAsTable(table)
+    (
+        df.write.mode("overwrite")
+        .bucketBy(n_buckets, key)
+        .sortBy(key)
+        .format("parquet")
+        .saveAsTable(table)
+    )
 
 
 def write_jsonl(df: DataFrame, path: str, n_shards: int | None = None) -> None:
@@ -521,38 +524,6 @@ def read_csv_quarantine(
         F.col("_corrupt_record").alias("raw_line")
     )
     return good, quarantine
-
-
-def write_bucketed_table(
-    spark: SparkSession,
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 8,
-) -> None:
-    """Persist ``df`` as a BUCKETED (and bucket-sorted) managed table —
-    the layout that makes repeated co-keyed joins/aggregations
-    shuffle-free: every reader sees an output partitioning of
-    ``hashpartitioning(bucket_col, n_buckets)``, so a join of two
-    tables bucketed the same way satisfies both sides'
-    ClusteredDistribution with ZERO Exchange in the plan (proven by
-    tests/test_wrappers.py::test_bucketed_join_is_shuffle_free).
-
-    This is the repo's substantiation for every "at a real deployment
-    both sides are bucketed on the key → the shuffle disappears"
-    docstring claim: the 100 TB pattern is to pay the fact table's
-    shuffle ONCE at ingest (this write), then run every downstream
-    orderkey join against free co-location. Uses Spark's built-in
-    catalog (no Hive required); ``sortBy`` additionally enables
-    merge-join without a per-task sort.
-    """
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .format("parquet")
-        .saveAsTable(table)
-    )
 
 
 def write_orc(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> None:

@@ -1,1 +1,1 @@
-from .pending_stream import pending_stream, run_available_now  # noqa: F401
+from .pending_stream import pending_stream  # noqa: F401

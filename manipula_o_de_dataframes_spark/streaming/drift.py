@@ -17,50 +17,28 @@ same documented trade as every other drain in this package).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .joins import _events_stream, drain_shuffle_partitions
+from .drain import drain
+from .joins import _events_stream
 
 
 def drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from ..queries import _drift_from_counts  # noqa: PLC0415
 
-    watch_dir = tempfile.mkdtemp(prefix="manipula_stream_drift_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_stream_drift_ckpt_")
-    name = "drift_stream_" + uuid.uuid4().hex
-    try:
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(watch_dir, "events.parquet"),
-        )
+    with drain(spark, "stream_drift") as d:
+        d.link(os.path.join(sf_dir, "events.parquet"), "events.parquet")
         counts = (
-            _events_stream(spark, watch_dir)
+            _events_stream(spark, d.watch)
             .groupBy(
                 F.window("ts", "7 days")["start"].alias("__wk"),
                 "event_type",
             )
             .agg(F.count(F.lit(1)).alias("__c"))
         )
-        with drain_shuffle_partitions(spark):
-            (
-                counts.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-                .awaitTermination()
-            )
-        sink = spark.table(name)
-        drained = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
+        d.run(counts, "complete")
+        drained = d.collect()
     return _drift_from_counts(drained)

@@ -22,11 +22,14 @@ the batch plan under any partitioning.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.io import read_table
-from .joins import _events_stream, drain_shuffle_partitions
+from .drain import drain
+from .joins import _events_stream
 
 
 def _nation_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -49,43 +52,17 @@ def _finalize(agg: DataFrame) -> DataFrame:
 
 
 def enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
-    watch_dir = tempfile.mkdtemp(prefix="manipula_stream_enrich_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_stream_enrich_ckpt_")
-    name = "enrich_stream_" + uuid.uuid4().hex
-    try:
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(watch_dir, "events.parquet"),
-        )
-        dim = _nation_dim(spark, sf_dir)
+    with drain(spark, "stream_enrich") as d:
+        d.link(os.path.join(sf_dir, "events.parquet"), "events.parquet")
         agg = (
-            _events_stream(spark, watch_dir)
-            .join(dim, F.col("user_id") == F.col("c_custkey"))
+            _events_stream(spark, d.watch)
+            .join(_nation_dim(spark, sf_dir), F.col("user_id") == F.col("c_custkey"))
             .groupBy("n_name")
             .agg(
                 F.count(F.lit(1)).alias("__n"),
                 F.sum(F.col("value").cast("decimal(18,2)")).alias("__v"),
             )
         )
-        with drain_shuffle_partitions(spark):
-            (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-                .awaitTermination()
-            )
-        sink = spark.table(name)
-        drained = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
+        d.run(agg, "complete")
+        drained = d.collect()
     return _finalize(drained)

@@ -17,60 +17,13 @@ Spark interval-join shape.
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
+import os
+from datetime import timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# serializes drains: two overlapping drains would capture each other's
-# temporary value as "old" and leave the session pinned at the drain
-# setting after both restore
-_DRAIN_LOCK = threading.Lock()
-
-
-def pin_increasing_mtimes(watch_dir: str, subdirs) -> None:
-    """Pin strictly increasing mtimes on staged delivery subdirs.
-
-    FileStreamSource orders files by modification time; back-to-back
-    writes can tie, which would reorder micro-batches and silently
-    flip any order-dependent sink (last-writer-wins upserts, index
-    builds). One shared implementation of the convention so a future
-    change (e.g. nanosecond ties) lands everywhere at once; the
-    single-file staging sites in this module and stateful.py pin the
-    same way inline at copy time.
-    """
-    import os  # noqa: PLC0415
-
-    for i, sub in enumerate(subdirs, start=1):
-        t = 1_000_000_000 + i * 100
-        for root, _dirs, files in os.walk(os.path.join(watch_dir, sub)):
-            for fn in files:
-                os.utime(os.path.join(root, fn), (t, t))
-
-
-@contextmanager
-def drain_shuffle_partitions(spark: SparkSession, n: int = 4):
-    """Scope ``spark.sql.shuffle.partitions`` down for a one-shot drain.
-
-    Each stateful operator keeps one state store PER shuffle partition
-    and commits every store every micro-batch — overhead linear in the
-    partition count, regardless of data volume. An availableNow drain
-    of a bounded snapshot wants a small fixed count (measured 2× on the
-    stream-stream join at 32→8, and a further ~0.7s at 8→4 — the
-    symmetric hash join keeps FOUR stores per partition, so the
-    commit count is 4·n·batches; below 4 the gain flattens while
-    per-partition state grows). The conf is restored on exit, so batch
-    parallelism outside the drain is untouched; streaming queries latch
-    the value at .start(), which this context encloses.
-    """
-    with _DRAIN_LOCK:
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+from .drain import drain
 
 # events.parquet's ts physical type has shifted between fixture
 # generations (TIMESTAMP(NANOS) in early rounds, TIMESTAMP(MICROS)
@@ -94,7 +47,6 @@ _NTZ_TS = "convert_timezone('UTC', timestamp_micros(ts div 1000))"
 def _events_ts_unit(watch_dir: str) -> str:
     """Probe the ts column's time unit ('ns'/'us') from a staged file."""
     import glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
 
     import pyarrow.parquet as pq  # noqa: PLC0415
 
@@ -126,7 +78,6 @@ def _events_footer_max_ts(sf_dir: str):
     non-semantic (e.g. picking a staging split point): a NANOS footer
     truncates to the datetime's micros."""
     import glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
     from datetime import datetime  # noqa: PLC0415
 
     import pyarrow.parquet as pq  # noqa: PLC0415
@@ -173,21 +124,10 @@ def attribution_pairs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink; the result is re-hosted in a local DataFrame and every staged
     resource (watch dir, checkpoint, sink table) is torn down.
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
-    watch_dir = tempfile.mkdtemp(prefix="manipula_stream_join_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_stream_join_ckpt_")
-    name = "attribution_stream_" + uuid.uuid4().hex
-    try:
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(watch_dir, "events.parquet"),
-        )
+    with drain(spark, "stream_join") as d:
+        d.link(os.path.join(sf_dir, "events.parquet"), "events.parquet")
         buys = (
-            _events_stream(spark, watch_dir)
+            _events_stream(spark, d.watch)
             .filter(F.col("event_type") == "purchase")
             .select(
                 F.col("event_id").alias("compra"),
@@ -196,7 +136,7 @@ def attribution_pairs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         views = (
-            _events_stream(spark, watch_dir)
+            _events_stream(spark, d.watch)
             .filter(F.col("event_type") == "view")
             .select(
                 F.col("event_id").alias("visita"),
@@ -219,23 +159,8 @@ def attribution_pairs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("ts_compra", "yyyy-MM-dd HH:mm:ss").alias("quando_compra"),
             F.date_format("ts_view", "yyyy-MM-dd HH:mm:ss").alias("quando_view"),
         )
-        with drain_shuffle_partitions(spark):
-            (
-                pairs.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-                .awaitTermination()
-            )
-        sink = spark.table(name)
-        result = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return result
+        d.run(pairs, "append")
+        return d.collect()
 
 
 def dedup_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -249,20 +174,14 @@ def dedup_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     here keeps unbounded state for the one-shot availableNow pass
     (event time is TIMESTAMP_NTZ — same trade as the other drains).
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
-    watch_dir = tempfile.mkdtemp(prefix="manipula_stream_dedup_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_stream_dedup_ckpt_")
-    name = "dedup_stream_" + uuid.uuid4().hex
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        os.symlink(src, os.path.join(watch_dir, "events_delivery1.parquet"))
-        os.symlink(src, os.path.join(watch_dir, "events_delivery2.parquet"))
+    with drain(spark, "stream_dedup") as d:
+        d.link(
+            os.path.join(sf_dir, "events.parquet"),
+            "events_delivery1.parquet",
+            "events_delivery2.parquet",
+        )
         deduped = (
-            _events_stream(spark, watch_dir)
+            _events_stream(spark, d.watch)
             .dropDuplicates(["event_id"])
             .groupBy(F.col("event_type").alias("tipo"))
             .agg(
@@ -270,23 +189,8 @@ def dedup_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("valor_total"),
             )
         )
-        with drain_shuffle_partitions(spark):
-            (
-                deduped.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-                .awaitTermination()
-            )
-        sink = spark.table(name)
-        result = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return result
+        d.run(deduped, "complete")
+        return d.collect()
 
 
 def attribution_pairs_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -311,19 +215,9 @@ def attribution_pairs_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
     (wm − 1h − delay) always reaches past the split. 10-minute
     delay; pairs identical to the un-watermarked drain.
     """
-    import glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from ..sources.io import read_table  # noqa: PLC0415
 
-    watch_dir = tempfile.mkdtemp(prefix="manipula_wmjoin_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_wmjoin_ckpt_")
-    stage_dir = tempfile.mkdtemp(prefix="manipula_wmjoin_stage_")
-    name = "attribution_wm_" + uuid.uuid4().hex
-    try:
+    with drain(spark, "wmjoin") as d:
         e = read_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "ts"
         )
@@ -331,8 +225,6 @@ def attribution_pairs_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
         # yields the identical pair set — see the retention argument
         # above), so read max(ts) from the parquet footer stats when
         # available instead of paying a Spark aggregation job.
-        from datetime import timedelta  # noqa: PLC0415
-
         footer_max = _events_footer_max_ts(sf_dir)
         if footer_max is not None:
             split = footer_max - timedelta(days=3)
@@ -340,30 +232,7 @@ def attribution_pairs_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
             split = e.agg(
                 F.expr("max(ts) - INTERVAL 3 DAYS").alias("cut")
             ).collect()[0]["cut"]
-        # one staging job: partitionBy splits the two deliveries in a
-        # single scan (was two sequential coalesce(1) writes)
-        e.withColumn(
-            "__d", F.when(F.col("ts") < F.lit(split), 1).otherwise(2)
-        ).coalesce(1).write.partitionBy("__d").mode("overwrite").parquet(stage_dir)
-        import pyarrow as pa  # noqa: PLC0415
-        import pyarrow.parquet as pq  # noqa: PLC0415
-
-        empty = pa.table(
-            {
-                "event_id": pa.array([], type=pa.int64()),
-                "user_id": pa.array([], type=pa.int64()),
-                "event_type": pa.array([], type=pa.string()),
-                "ts": pa.array([], type=pa.timestamp("us")),
-            }
-        )
-        for i in (1, 2):
-            dst = os.path.join(watch_dir, f"delivery{i}.parquet")
-            parts = glob.glob(os.path.join(stage_dir, f"__d={i}", "part-*.parquet"))
-            if parts:
-                shutil.copyfile(parts[0], dst)
-            else:
-                pq.write_table(empty, dst)
-            os.utime(dst, (1_000_000_000 + i * 100,) * 2)
+        d.split(e, F.when(F.col("ts") < F.lit(split), 1).otherwise(2), 2)
         schema = "event_id long, user_id long, event_type string, ts timestamp_ntz"
         ts_i = F.expr(
             "timestamp_seconds(timestampdiff(SECOND, TIMESTAMP '1970-01-01 00:00:00', ts))"
@@ -373,7 +242,7 @@ def attribution_pairs_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
             return (
                 spark.readStream.schema(schema)
                 .option("maxFilesPerTrigger", 1)
-                .parquet(watch_dir)
+                .parquet(d.watch)
                 .withColumn("ts_i", ts_i)
                 .withWatermark("ts_i", "10 minutes")
             )
@@ -405,27 +274,11 @@ def attribution_pairs_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame
             F.date_format("ts_compra", "yyyy-MM-dd HH:mm:ss").alias("quando_compra"),
             F.date_format("ts_view", "yyyy-MM-dd HH:mm:ss").alias("quando_view"),
         )
-        with drain_shuffle_partitions(spark):
-            q = (
-                pairs.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-            )
-            q.awaitTermination()
-        removed = sum(
-            so.get("numRowsRemoved", 0)
-            for p in q.recentProgress
-            for so in p.get("stateOperators", [])
-        )
-        sink = spark.table(name)
-        result = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-        shutil.rmtree(stage_dir, ignore_errors=True)
-    attribution_pairs_watermarked.last_removed = removed  # test hook
+        q = d.run(pairs, "append")
+        result = d.collect()
+    attribution_pairs_watermarked.last_removed = sum(  # test hook
+        so.get("numRowsRemoved", 0)
+        for p in q.recentProgress
+        for so in p.get("stateOperators", [])
+    )
     return result

@@ -24,16 +24,13 @@ lakehouse deployment).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import incremental_near_dups, minhash_signature
 from ..sources.io import read_table
-from .joins import drain_shuffle_partitions, pin_increasing_mtimes
+from .drain import drain, pin_increasing_mtimes
 
 DOCS_SCHEMA = "doc_id long, text string"
 # The persisted index artifact: banding signatures + verify shingles —
@@ -102,43 +99,24 @@ def screen_batch(index_dir: str, out_dir: str, batch: DataFrame, batch_id: int) 
 
 
 def neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    watch_dir = tempfile.mkdtemp(prefix="manipula_neardup_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_neardup_ckpt_")
-    state_root = tempfile.mkdtemp(prefix="manipula_neardup_state_")
-    index_dir = os.path.join(state_root, "index")
-    out_dir = os.path.join(state_root, "admissions")
-    try:
+    with drain(spark, "neardup", "state") as d:
+        index_dir = os.path.join(d.state, "index")
+        out_dir = os.path.join(d.state, "admissions")
         docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
         docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(
-            os.path.join(watch_dir, "d1_index")
+            os.path.join(d.watch, "d1_index")
         )
         docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(
-            os.path.join(watch_dir, "d2_batch")
+            os.path.join(d.watch, "d2_batch")
         )
-        # FileStreamSource orders by mtime; a tie would screen the
-        # index delivery against the batch.
-        pin_increasing_mtimes(watch_dir, ("d1_index", "d2_batch"))
+        # an mtime tie would screen the index delivery against the batch
+        pin_increasing_mtimes(d.watch, ("d1_index", "d2_batch"))
         stream = (
             spark.readStream.schema(DOCS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
-            .parquet(watch_dir + "/*")
+            .parquet(d.watch + "/*")
         )
-        name = "neardup_" + uuid.uuid4().hex
-        with drain_shuffle_partitions(spark):
-            (
-                stream.writeStream.foreachBatch(
-                    lambda b, bid: screen_batch(index_dir, out_dir, b, bid)
-                )
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-                .awaitTermination()
-            )
+        d.run(stream, batch=lambda b, bid: screen_batch(index_dir, out_dir, b, bid))
         final = spark.read.parquet(out_dir + "/b*")
         out = spark.createDataFrame(final.collect(), final.schema)
-    finally:
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-        shutil.rmtree(state_root, ignore_errors=True)
     return out.orderBy("doc_id")

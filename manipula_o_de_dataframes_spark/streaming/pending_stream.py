@@ -20,8 +20,12 @@ that keeps producing snapshots.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .drain import drain
 
 
 def pending_stream(
@@ -66,25 +70,13 @@ def pending_stream_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     live-feed variant (``pending_stream``) keeps one on a TIMESTAMP
     event-time column.
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
-    # The file source watches a *directory*; stage the snapshot into a
-    # fresh one (symlink — no copy) as a live feed would drop it there.
-    # Every resource (watch dir, checkpoint, memory-sink table) is torn
-    # down before returning — repeated runs leave nothing behind
-    # (ADVICE r1); the small final aggregate is re-hosted in a local
-    # DataFrame that outlives the sink table.
-    watch_dir = tempfile.mkdtemp(prefix="manipula_stream_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_stream_ckpt_")
-    name = "pending_stream_" + uuid.uuid4().hex
-    try:
-        os.symlink(os.path.join(sf_dir, "orders.parquet"),
-                   os.path.join(watch_dir, "orders.parquet"))
+    # The file source watches a *directory*; the snapshot is staged into
+    # a fresh one as a live feed would drop it there. The small final
+    # aggregate is re-hosted in a local DataFrame that outlives the sink.
+    with drain(spark, "stream") as d:
+        d.link(os.path.join(sf_dir, "orders.parquet"), "orders.parquet")
         schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
-        stream = spark.readStream.schema(schema).parquet(watch_dir)
+        stream = spark.readStream.schema(schema).parquet(d.watch)
         pending = (
             stream.filter(F.col("o_orderstatus") == "P")
             .withColumn("snapshot", F.element_at(F.split(F.input_file_name(), "/"), -1))
@@ -101,43 +93,5 @@ def pending_stream_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_pendentes",
             "valor_total",
         )
-        from .joins import drain_shuffle_partitions  # noqa: PLC0415
-
-        with drain_shuffle_partitions(spark):
-            (
-                out.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-                .awaitTermination()
-            )
-        sink = spark.table(name)
-        result = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return result
-
-
-def run_available_now(result: DataFrame, sink_fn, checkpoint_dir: str | None = None) -> None:
-    """Drain everything currently in the source dir through foreachBatch.
-
-    Trigger availableNow processes all pending files then stops — the
-    batch-equivalence mode used by the tests. A fresh checkpoint dir is
-    created when none is given (a reused checkpoint would replay offsets
-    from a previous, possibly different, query).
-    """
-    import tempfile  # noqa: PLC0415
-
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="manipula_stream_ckpt_")
-    (
-        result.writeStream.outputMode("update")
-        .foreachBatch(lambda df, epoch: sink_fn(df, epoch))
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-        .awaitTermination()
-    )
+        d.run(out, "complete")
+        return d.collect()

@@ -17,11 +17,14 @@ trade as every other drain in this package).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.formatting import dsum
-from .joins import _events_stream, drain_shuffle_partitions
+from .drain import drain
+from .joins import _events_stream
 
 
 def sessionize_stream(spark: SparkSession, sf_dir: str, gap: str = "30 minutes") -> DataFrame:
@@ -32,21 +35,12 @@ def sessionize_stream(spark: SparkSession, sf_dir: str, gap: str = "30 minutes")
     oracle — the streaming plan must MERGE partial sessions across
     micro-batches to match it, which is exactly what this exercises.
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
+    from ..operators.spool import spool  # noqa: PLC0415
 
-    watch_dir = tempfile.mkdtemp(prefix="manipula_stream_sess_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_stream_sess_ckpt_")
-    name = "sessionize_stream_" + uuid.uuid4().hex
-    try:
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(watch_dir, "events.parquet"),
-        )
+    with drain(spark, "stream_sess") as d:
+        d.link(os.path.join(sf_dir, "events.parquet"), "events.parquet")
         agg = (
-            _events_stream(spark, watch_dir)
+            _events_stream(spark, d.watch)
             .groupBy(
                 F.col("user_id").alias("usuario"),
                 F.session_window("ts", gap),
@@ -58,25 +52,8 @@ def sessionize_stream(spark: SparkSession, sf_dir: str, gap: str = "30 minutes")
                 dsum("value").alias("valor_total"),
             )
         )
-        out = agg.select("usuario", "inicio", "fim", "n_eventos", "valor_total")
-        with drain_shuffle_partitions(spark):
-            (
-                out.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-                .awaitTermination()
-            )
+        d.run(agg.select("usuario", "inicio", "fim", "n_eventos", "valor_total"), "complete")
         # ~95k session rows at sf0.1: spool executor-side instead of
         # collect+createDataFrame, which round-trips every row through
         # the driver twice (py4j out, py4j back in)
-        from ..operators.spool import spool  # noqa: PLC0415
-
-        result = spool(spark.table(name))
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-    return result
+        return spool(d.sink)

@@ -15,7 +15,11 @@ O(history).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
+
+from .drain import drain
 
 OUTPUT_SCHEMA = "key string, n long, total double"
 # state carries exact integer cents — a double field here would silently
@@ -70,23 +74,11 @@ def running_totals_drained(spark, sf_dir: str) -> DataFrame:
     aggregate — which is what the DuckDB oracle computes, making the
     cross-batch state arithmetic hash-verified.
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from pyspark.sql import functions as F  # noqa: PLC0415
     from pyspark.sql import Window  # noqa: PLC0415
 
-    from .joins import drain_shuffle_partitions  # noqa: PLC0415
-
-    watch_dir = tempfile.mkdtemp(prefix="manipula_stateful_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_stateful_ckpt_")
-    name = "running_totals_" + uuid.uuid4().hex
-    try:
-        src = os.path.join(sf_dir, "events.parquet")
-        os.symlink(src, os.path.join(watch_dir, "delivery1.parquet"))
-        os.symlink(src, os.path.join(watch_dir, "delivery2.parquet"))
+    with drain(spark, "stateful") as d:
+        d.link(os.path.join(sf_dir, "events.parquet"), "delivery1.parquet", "delivery2.parquet")
         # partial schema: only the two columns the operator touches —
         # sidesteps the fixture's variable ts unit entirely, and
         # maxFilesPerTrigger=1 forces one micro-batch PER delivery so
@@ -94,25 +86,10 @@ def running_totals_drained(spark, sf_dir: str) -> DataFrame:
         stream = (
             spark.readStream.schema("event_type string, value double")
             .option("maxFilesPerTrigger", 1)
-            .parquet(watch_dir)
+            .parquet(d.watch)
         )
-        totals = running_totals_stream(stream, "event_type", "value")
-        with drain_shuffle_partitions(spark):
-            (
-                totals.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-                .awaitTermination()
-            )
-        sink = spark.table(name)
-        emitted = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
+        d.run(running_totals_stream(stream, "event_type", "value"), "update")
+        emitted = d.collect()
     w = Window.partitionBy("key").orderBy(F.col("n").desc())
     return (
         emitted.withColumn("__rn", F.row_number().over(w))
@@ -151,22 +128,11 @@ def late_drop_drained(spark, sf_dir: str) -> DataFrame:
     The three deliveries are real parquet files with forced mtime
     order (maxFilesPerTrigger=1 → one micro-batch each).
     """
-    import glob  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from pyspark.sql import functions as F  # noqa: PLC0415
 
     from ..sources.io import read_table  # noqa: PLC0415
-    from .joins import drain_shuffle_partitions  # noqa: PLC0415
 
-    watch_dir = tempfile.mkdtemp(prefix="manipula_late_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_late_ckpt_")
-    stage_dir = tempfile.mkdtemp(prefix="manipula_late_stage_")
-    name = "late_drop_" + uuid.uuid4().hex
-    try:
+    with drain(spark, "late") as d:
         e = read_table(spark, sf_dir, "events").select("event_id", "ts")
         is_late = (
             F.conv(
@@ -181,35 +147,12 @@ def late_drop_drained(spark, sf_dir: str) -> DataFrame:
             % 8
             == 0
         )
-        # ONE staging job: partitionBy splits on-time (d=1) and late
-        # (d=3) in a single scan (was 3 sequential coalesce(1) writes,
-        # ~0.3s saved warm); the empty d=2 heartbeat needs no Spark job
-        # at all — an empty parquet footer with the matching physical
-        # schema (int64 + MICROS-NTZ, what Spark writes for
-        # timestamp_ntz) is written driver-side.
-        e.withColumn("__d", F.when(is_late, 3).otherwise(1)).coalesce(
-            1
-        ).write.partitionBy("__d").mode("overwrite").parquet(stage_dir)
-        import pyarrow as pa  # noqa: PLC0415
-        import pyarrow.parquet as pq  # noqa: PLC0415
-
-        empty = pa.table(
-            {
-                "event_id": pa.array([], type=pa.int64()),
-                "ts": pa.array([], type=pa.timestamp("us")),
-            }
-        )
-        for i in (1, 2, 3):
-            dst = os.path.join(watch_dir, f"delivery{i}.parquet")
-            parts = glob.glob(os.path.join(stage_dir, f"__d={i}", "part-*.parquet"))
-            if parts:
-                shutil.copyfile(parts[0], dst)
-            else:
-                pq.write_table(empty, dst)
-            os.utime(dst, (1_000_000_000 + i * 100, 1_000_000_000 + i * 100))
+        # on-time rows are delivery 1, late rows delivery 3; delivery 2
+        # is the empty heartbeat
+        d.split(e, F.when(is_late, 3).otherwise(1), 3)
         stream = spark.readStream.schema("event_id long, ts timestamp_ntz").option(
             "maxFilesPerTrigger", 1
-        ).parquet(watch_dir)
+        ).parquet(d.watch)
         # withWatermark rejects TIMESTAMP_NTZ; build the required LTZ
         # instant NUMERICALLY (epoch seconds of the wall clock), which
         # is session-tz-independent — a plain NTZ→LTZ cast would shift
@@ -235,28 +178,12 @@ def late_drop_drained(spark, sf_dir: str) -> DataFrame:
                 "n",
             )
         )
-        with drain_shuffle_partitions(spark):
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-            )
-            q.awaitTermination()
-        dropped = sum(
-            p["stateOperators"][0].get("numRowsDroppedByWatermark", 0)
-            for p in q.recentProgress
-        )
-        sink = spark.table(name)
-        emitted = spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        spark.catalog.dropTempView(name)
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-        shutil.rmtree(stage_dir, ignore_errors=True)
-    late_drop_drained.last_dropped = dropped  # test hook: the real drop count
+        q = d.run(agg, "append")
+        emitted = d.collect()
+    late_drop_drained.last_dropped = sum(  # test hook: the real drop count
+        p["stateOperators"][0].get("numRowsDroppedByWatermark", 0)
+        for p in q.recentProgress
+    )
     return emitted.select("janela", F.col("n").cast("long").alias("n")).orderBy(
         "janela"
     )

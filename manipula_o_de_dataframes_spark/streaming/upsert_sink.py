@@ -21,11 +21,11 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .drain import drain, pin_increasing_mtimes
 
 MERGED_SCHEMA = "pedido long, situacao string, total double, origem string"
 
@@ -91,16 +91,12 @@ def upsert_drained(spark: SparkSession, sf_dir: str, state_dir: str | None = Non
     the update batch genuinely merges against persisted state, not
     against co-delivered rows.
     """
-    from .joins import drain_shuffle_partitions, pin_increasing_mtimes  # noqa: PLC0415
     from ..functions.formatting import MONEY  # noqa: PLC0415
+    from ..operators.spool import spool  # noqa: PLC0415
     from ..sources.io import read_table  # noqa: PLC0415
 
-    watch_dir = tempfile.mkdtemp(prefix="manipula_upsert_in_")
-    ckpt_dir = tempfile.mkdtemp(prefix="manipula_upsert_ckpt_")
-    own_state = state_dir is None
-    if own_state:
-        state_dir = tempfile.mkdtemp(prefix="manipula_upsert_state_") + "/state"
-    try:
+    with drain(spark, "upsert", "state") as d:
+        state_dir = state_dir or os.path.join(d.state, "state")
         o = read_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_orderstatus",
@@ -118,39 +114,19 @@ def upsert_drained(spark: SparkSession, sf_dir: str, state_dir: str | None = Non
             (F.col("__t") + F.lit(10).cast(MONEY)).cast("double").alias("total"),
             F.lit("atualizado").alias("origem"),
         )
-        base.coalesce(1).write.parquet(os.path.join(watch_dir, "d1_base"))
-        upd.coalesce(1).write.parquet(os.path.join(watch_dir, "d2_updates"))
-        # FileStreamSource orders files by modification time; a tie
-        # would invert the batch order and let last-writer-wins flip
-        # updates back to 'original'.
-        pin_increasing_mtimes(watch_dir, ("d1_base", "d2_updates"))
+        base.coalesce(1).write.parquet(os.path.join(d.watch, "d1_base"))
+        upd.coalesce(1).write.parquet(os.path.join(d.watch, "d2_updates"))
+        # an mtime tie would invert the batch order and let
+        # last-writer-wins flip updates back to 'original'
+        pin_increasing_mtimes(d.watch, ("d1_base", "d2_updates"))
         stream = (
             spark.readStream.schema(MERGED_SCHEMA)
             .option("maxFilesPerTrigger", 1)
-            .parquet(watch_dir + "/*")
+            .parquet(d.watch + "/*")
         )
-        name = "upsert_" + uuid.uuid4().hex
-        with drain_shuffle_partitions(spark):
-            (
-                stream.writeStream.foreachBatch(
-                    lambda batch, _id: merge_batch(state_dir, batch)
-                )
-                .queryName(name)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt_dir)
-                .start()
-                .awaitTermination()
-            )
-        final = spark.read.schema(MERGED_SCHEMA).parquet(state_dir)
+        d.run(stream, batch=lambda batch, _id: merge_batch(state_dir, batch))
         # materialize before the state dir is removed — spooled
         # executor-side (150k rows at sf0.1; a collect+createDataFrame
         # here pushed every row through the driver, ~0.5s of py4j)
-        from ..operators.spool import spool  # noqa: PLC0415
-
-        out = spool(final)
-    finally:
-        shutil.rmtree(watch_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
-        if own_state:
-            shutil.rmtree(os.path.dirname(state_dir), ignore_errors=True)
+        out = spool(spark.read.schema(MERGED_SCHEMA).parquet(state_dir))
     return out.orderBy("pedido")

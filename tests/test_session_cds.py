@@ -175,6 +175,20 @@ def test_publishing_keeps_other_installs_archives(trees, tmp_path):
     assert not glob.glob(theirs.archive + "*")
 
 
+def test_big_heap_launches_plain_and_keeps_the_archive(trees):
+    """A heap of 32 GiB or more turns off the JVM's compressed pointers,
+    and such a JVM refuses the archive: the launch runs plain instead of
+    mapping it, and the archive survives for the next normal launch."""
+    cache, jdk, spark = trees
+    plan = session.cds_plan(cache, jdk, spark, "40g")
+    assert plan == session.CdsPlan("off:heap")
+    assert not os.path.exists(cache)  # trains nothing, takes no lock
+    _train(session.cds_plan(cache, jdk, spark, "2g"))
+    for big in ("32g", "32768m", "40GB", "32768"):
+        assert session.cds_plan(cache, jdk, spark, big) == session.CdsPlan("off:heap"), big
+    assert session.cds_plan(cache, jdk, spark, "31g").state == "mapped"
+
+
 def test_conf_dir_with_a_real_file_is_off_conf(trees, monkeypatch):
     cache, jdk, spark = trees
     (open(os.path.join(spark, "conf", "spark-defaults.conf"), "w")).close()

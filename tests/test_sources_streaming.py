@@ -5,10 +5,8 @@ from __future__ import annotations
 import pandas as pd
 
 from manipula_o_de_dataframes_spark.sources.io import read_ordered_snapshots
-from manipula_o_de_dataframes_spark.streaming.pending_stream import (
-    pending_stream,
-    run_available_now,
-)
+from manipula_o_de_dataframes_spark.streaming.drain import drain
+from manipula_o_de_dataframes_spark.streaming.pending_stream import pending_stream
 
 
 def _write_snapshots(tmp_path):
@@ -38,8 +36,7 @@ def test_read_ordered_snapshots_labels_and_alignment(spark, tmp_path):
 
 
 def test_pending_stream_available_now(spark, tmp_path):
-    src = tmp_path / "stream_src"
-    src.mkdir()
+    snap = tmp_path / "snap1.parquet"
     pd.DataFrame(
         {
             "o_orderstatus": ["P", "P", "O"],
@@ -49,17 +46,16 @@ def test_pending_stream_available_now(spark, tmp_path):
             "o_totalprice": [10.0, 20.0, 99.0],
             "o_custkey": [1, 2, 3],
         }
-    ).to_parquet(src / "snap1.parquet")
+    ).to_parquet(snap)
 
     schema = (
         "o_orderstatus string, o_orderdate timestamp, o_totalprice double, o_custkey long"
     )
-    result = pending_stream(spark, str(src), schema)
     seen: list = []
-    spark.conf.set(
-        "spark.sql.streaming.checkpointLocation", str(tmp_path / "ckpt")
-    )
-    run_available_now(result, lambda df, epoch: seen.extend(df.collect()))
+    with drain(spark, "pending_test") as d:
+        d.link(str(snap), "snap1.parquet")
+        result = pending_stream(spark, d.watch, schema)
+        d.run(result, "update", lambda df, epoch: seen.extend(df.collect()))
     assert seen, "stream produced no batches"
     total = sum(r["n_pendentes"] for r in seen)
     assert total == 2  # only the two PENDENTE rows

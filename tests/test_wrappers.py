@@ -78,7 +78,7 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
 
     from manipula_o_de_dataframes_spark.sources.io import (
         read_table,
-        write_bucketed_table,
+        write_bucketed,
     )
 
     old_wh = spark.conf.get("spark.sql.warehouse.dir", None)
@@ -87,8 +87,8 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         o = read_table(spark, SF_SMOKE, "orders").select("o_orderkey", "o_totalprice")
         li = read_table(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_quantity")
-        write_bucketed_table(spark, o, "bk_orders", "o_orderkey", 4)
-        write_bucketed_table(spark, li, "bk_lineitem", "l_orderkey", 4)
+        write_bucketed(o, "bk_orders", "o_orderkey", 4)
+        write_bucketed(li, "bk_lineitem", "l_orderkey", 4)
         j = spark.table("bk_lineitem").join(
             spark.table("bk_orders"),
             F.col("l_orderkey") == F.col("o_orderkey"),
